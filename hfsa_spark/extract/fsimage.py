@@ -23,12 +23,19 @@ decoding) to emit byte-range chunk specs; executors then read their
 ``mapInPandas`` (``load_fsimage(distributed=True)``, auto-enabled past
 ``_DISTRIBUTED_THRESHOLD`` section bytes). Parent wiring is a distributed
 join of the inode rows against (parent, child) edges decoded from the
-INODE_DIR section — no O(#inodes) driver dict. Compressed images (gzip /
-DefaultCodec are not splittable) are streaming-decompressed once,
+INODE_DIR section — no O(#inodes) driver dict — and paths are then
+materialized by ``pathmat.materialize_paths``' level-join. Compressed images
+(gzip / DefaultCodec are not splittable) are streaming-decompressed once,
 driver-side with constant memory, into a scratch file that the chunk reads
-then address; in cluster mode point ``scratch_dir`` at storage every
-executor can read. Small images stay on the single-pass driver path
-(``parse_fsimage``) — no executor round-trip for a 2 KB test image.
+then address; by default it lives in the session's ``SparkFiles`` root,
+which Spark removes when the session stops. In cluster mode point
+``scratch_dir`` at storage every executor can read.
+
+Small images stay on the single-pass driver path (``parse_fsimage``) — no
+executor round-trip for a 2 KB test image. That route already holds every
+row and the parent map in Python, so ``pathmat.resolve_paths`` walks the
+tree there and the rows enter Spark once, paths set: no Spark job per
+namespace level.
 """
 
 from __future__ import annotations
@@ -39,14 +46,14 @@ import io
 import mmap
 import os
 import struct
-import tempfile
 import zlib
 from dataclasses import dataclass, field
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 from hfsa_spark.schema import INODES_SCHEMA, ROOT_INODE_ID
-from hfsa_spark.extract.pathmat import finalize_inodes, materialize_paths
+from hfsa_spark.extract.pathmat import finalize_inodes, materialize_paths, resolve_paths
 
 MAGIC = b"HDFSIMG1"
 
@@ -983,12 +990,12 @@ _EDGE_DDL = "parent_id bigint, id bigint"
 
 def _materialize_big_sections(
     path: str, codec: str, sections: list[_Section], names: list[str],
-    scratch_dir: str | None,
+    scratch_dir: str,
 ) -> tuple[str, dict[str, tuple[int, int]]]:
     """Make the named sections byte-addressable for executor reads.
     Uncompressed: the image itself (zero copy). Compressed: one streaming
     driver-side decompress into an idempotent scratch file (keyed on image
-    identity) that chunk reads then address."""
+    identity) under ``scratch_dir`` that chunk reads then address."""
     by_name = {s.name: s for s in sections}
     if not codec:
         return path, {n: (by_name[n].offset, by_name[n].length) for n in names}
@@ -997,7 +1004,7 @@ def _materialize_big_sections(
     key = hashlib.sha1(
         f"{os.path.abspath(path)}:{st.st_size}:{st.st_mtime_ns}".encode()
     ).hexdigest()[:16]
-    scratch = os.path.join(scratch_dir or tempfile.gettempdir(), f"hfsa_decomp_{key}")
+    scratch = os.path.join(scratch_dir, f"hfsa_decomp_{key}")
     meta = scratch + ".meta"
     if os.path.exists(scratch) and os.path.exists(meta):
         with open(meta) as f:
@@ -1105,7 +1112,11 @@ def load_fsimage_distributed(
     ``target_chunk_bytes=None`` sizes chunks so every core gets ~3 of them
     (decode cost per byte is uniform, so equal-byte chunks balance well),
     floored at 4 MiB so a huge cluster doesn't shred a small image, capped
-    at 128 MiB so one task's bytes always fit executor memory."""
+    at 128 MiB so one task's bytes always fit executor memory.
+
+    ``scratch_dir=None`` puts a compressed image's decompressed sections in
+    the session's ``SparkFiles`` root directory, which Spark deletes when
+    the session stops; an explicit ``scratch_dir`` is kept."""
     codec, sections = _read_footer(path)
 
     table = _parse_string_table(_read_section(path, codec, sections, "STRING_TABLE"))
@@ -1117,7 +1128,8 @@ def load_fsimage_distributed(
         ref_ids = []
 
     data_path, spans = _materialize_big_sections(
-        path, codec, sections, ["INODE", "INODE_DIR"], scratch_dir
+        path, codec, sections, ["INODE", "INODE_DIR"],
+        scratch_dir or SparkFiles.getRootDirectory(),
     )
 
     if target_chunk_bytes is None:
@@ -1228,23 +1240,11 @@ def format_inode_proto(row: dict) -> str:
 
 
 def _index_rows(rows: list[dict]) -> tuple[dict, dict]:
-    """(by_id, by_path) lookup indexes over parsed raw rows."""
+    """(by_id, by_path) lookup indexes over parsed raw rows. A row whose
+    path does not resolve (dangling parent, cycle) is reachable by id only,
+    as it is absent from the loaded table."""
     by_id = {r["id"]: r for r in rows}
-    paths: dict[int, str] = {}
-
-    def full_path(rid: int) -> str:
-        if rid in paths:
-            return paths[rid]
-        r = by_id[rid]
-        if r["parent_id"] is None:
-            p = "/"
-        else:
-            parent = full_path(r["parent_id"])
-            p = ("" if parent == "/" else parent) + "/" + r["name"]
-        paths[rid] = p
-        return p
-
-    by_path = {full_path(rid): rid for rid in by_id}
+    by_path = {full_path: rows[i]["id"] for i, _, full_path, _ in resolve_paths(rows)}
     return by_id, by_path
 
 
@@ -1311,8 +1311,9 @@ def load_fsimage(
 ) -> DataFrame:
     """fsimage file → canonical ``inodes`` DataFrame: wire parse (executor-
     parallel for big images — see module docstring; ``distributed=None``
-    auto-selects on INODE section size), then distributed path
-    materialization + derived size columns."""
+    auto-selects on INODE section size), path materialization (driver-side
+    ``resolve_paths`` on the driver route, the ``materialize_paths``
+    level-join on the distributed one) + derived size columns."""
     if distributed is None:
         _, sections = _read_footer(path)
         ino = next((s.length for s in sections if s.name == "INODE"), 0)
@@ -1322,13 +1323,17 @@ def load_fsimage(
             spark, path, target_chunk_bytes=target_chunk_bytes,
             scratch_dir=scratch_dir,
         )
+        inodes = materialize_paths(raw)
     else:
         rows = parse_fsimage(path)
-        raw = spark.createDataFrame(
-            [tuple(r[f] for f in _RAW_FIELDS) for r in rows], schema=_RAW_DDL
+        inodes = spark.createDataFrame(
+            [
+                tuple(rows[i][f] for f in _RAW_FIELDS) + (p, full_path, depth)
+                for i, p, full_path, depth in resolve_paths(rows)
+            ],
+            schema=_RAW_DDL + ", path string, full_path string, depth int",
         )
-    inodes = finalize_inodes(materialize_paths(raw))
-    return inodes.select([f.name for f in INODES_SCHEMA.fields])
+    return finalize_inodes(inodes).select([f.name for f in INODES_SCHEMA.fields])
 
 
 def load_fsimage_series(

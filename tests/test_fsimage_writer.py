@@ -8,8 +8,7 @@ import pytest
 
 from hfsa_spark.extract.fsimage import load_fsimage, parse_fsimage
 from hfsa_spark.extract.fsimage_writer import write_fsimage
-
-LIB_RES = "/root/reference/lib/src/test/resources"
+from tests.test_fsimage import C210K, H3_2, needs
 
 
 def _comparable(rows):
@@ -24,8 +23,9 @@ def _comparable(rows):
 @pytest.mark.parametrize(
     "codec", [None, "default", "gzip", "lz4", "snappy", "bzip2", "zstd", "lzo", "lzop"]
 )
+@needs(H3_2)
 def test_roundtrip_small_h3_2(tmp_path, codec):
-    src = parse_fsimage(f"{LIB_RES}/fsi_small_h3_2.img")
+    src = parse_fsimage(H3_2)
     out = str(tmp_path / "rt.img")
     write_fsimage(out, src, codec=codec)
     assert _comparable(parse_fsimage(out)) == _comparable(src)
@@ -42,13 +42,14 @@ def test_roundtrip_small_h3_2(tmp_path, codec):
         ("zstd", "org.apache.hadoop.io.compress.ZStandardCodec"),
     ],
 )
+@needs(H3_2)
 def test_codec_classname_in_footer_and_uncompressed_twin(tmp_path, codec, cls):
     """The footer must carry the real Hadoop codec class name (what a
     NameNode writes for dfs.image.compression.codec), and the decoded
     rows must equal the uncompressed twin's exactly
     (FsImageLoader.java:268 accepts any factory codec; r7 VERDICT
     missing-item #1)."""
-    src = parse_fsimage(f"{LIB_RES}/fsi_small_h3_2.img")
+    src = parse_fsimage(H3_2)
     plain, comp = str(tmp_path / "plain.img"), str(tmp_path / "comp.img")
     write_fsimage(plain, src)
     write_fsimage(comp, src, codec=codec)
@@ -57,25 +58,28 @@ def test_codec_classname_in_footer_and_uncompressed_twin(tmp_path, codec, cls):
 
 
 @pytest.mark.parametrize("codec", ["lz4", "snappy", "zstd", "bzip2", "lzo", "lzop"])
+@needs(C210K)
 def test_new_codec_210k_multiblock(tmp_path, codec):
     """The 210k image's INODE section spans many 256 KiB blocks — pins
     the multi-block BlockCompressorStream framing (lz4/snappy) and the
     large-stream paths (zstd/bzip2), not just single-block toys."""
-    src = parse_fsimage(f"{LIB_RES}/fsimage_d800_f210k_compressed.img")
+    src = parse_fsimage(C210K)
     out = str(tmp_path / f"rt210k_{codec}.img")
     write_fsimage(out, src, codec=codec)
     assert _comparable(parse_fsimage(out)) == _comparable(src)
 
 
+@needs(C210K)
 def test_roundtrip_210k_compressed(tmp_path):
-    src = parse_fsimage(f"{LIB_RES}/fsimage_d800_f210k_compressed.img")
+    src = parse_fsimage(C210K)
     out = str(tmp_path / "rt210k.img")
     write_fsimage(out, src, codec="default")
     assert _comparable(parse_fsimage(out)) == _comparable(src)
 
 
+@needs(H3_2)
 def test_streaming_writer_matches_buffered(tmp_path):
-    src = parse_fsimage(f"{LIB_RES}/fsi_small_h3_2.img")
+    src = parse_fsimage(H3_2)
     names = sorted({r["user"] for r in src} | {r["group"] for r in src})
     buffered, streamed = str(tmp_path / "b.img"), str(tmp_path / "s.img")
     write_fsimage(buffered, src)
@@ -87,11 +91,12 @@ def test_streaming_writer_matches_buffered(tmp_path):
 
 
 @pytest.mark.parametrize("codec", ["gzip", "lz4", "snappy", "zstd", "lzo", "lzop"])
+@needs(H3_2)
 def test_written_image_distributed_load(spark, tmp_path, codec):
     """A writer-produced compressed image must load identically through the
     driver-side and executor-parallel decode paths (the latter exercises
     the streaming scratch-file decompress per codec)."""
-    src = parse_fsimage(f"{LIB_RES}/fsi_small_h3_2.img")
+    src = parse_fsimage(H3_2)
     out = str(tmp_path / f"dist_{codec}.img")
     write_fsimage(out, src, codec=codec)
     a = load_fsimage(spark, out, distributed=False)

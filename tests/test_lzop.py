@@ -22,6 +22,7 @@ from hfsa_spark.extract.lzop import (
     lzop_decompress,
     lzop_decompress_file,
 )
+from tests.test_fsimage import H3_2, needs
 
 # ------------------------------------------------ hand-assembled file --
 
@@ -183,6 +184,7 @@ def test_streaming_file_reader_bounded(tmp_path):
     assert n == len(data) and bytes(out) == data
 
 
+@needs(H3_2)
 def test_fsimage_level_acceptance(tmp_path):
     """A writer-produced LzopCodec image decodes identically to its
     uncompressed twin — the configuration the reference accepts via
@@ -190,9 +192,7 @@ def test_fsimage_level_acceptance(tmp_path):
     from hfsa_spark.extract.fsimage import parse_fsimage
     from hfsa_spark.extract.fsimage_writer import write_fsimage
 
-    src = parse_fsimage(
-        "/root/reference/lib/src/test/resources/fsi_small_h3_2.img"
-    )
+    src = parse_fsimage(H3_2)
     plain, comp = str(tmp_path / "p.img"), str(tmp_path / "c.img")
     write_fsimage(plain, src)
     write_fsimage(comp, src, codec="lzop")
