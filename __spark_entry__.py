@@ -17,10 +17,14 @@ Cross-engine value parity rules used throughout (both sides!):
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from hfsa_spark.plans import session_conf
+from hfsa_spark.streaming.run import drain
 
 
 # --------------------------------------------------------------- helpers --
@@ -2104,16 +2108,12 @@ def q129_wds_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed 822-byte encoding) into 4 tar shards, read them BACK through
     the shard reader, and report per-shard sample/byte totals — the
     oracle is the doc_id%4 closed form."""
-    import shutil
-    import tempfile
-
     from hfsa_spark.operators.multimodal import synthesize_patterned_bmp_table
     from hfsa_spark.sinks.webdataset import read_wds_shards, write_wds_shards
 
     d = _t(spark, sf_dir, "documents")
     media = synthesize_patterned_bmp_table(d, max_docs=100)
-    out = tempfile.mkdtemp(prefix="wds_gate_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="wds_gate_", ignore_cleanup_errors=True) as out:
         write_wds_shards(media, out, n_shards=4, ext="bmp")
         back = read_wds_shards(spark, out, ext="bmp")
         return (
@@ -2126,8 +2126,6 @@ def q129_wds_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("shard")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def q130_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2275,14 +2273,10 @@ def q139_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL export → re-import → per-lang aggregate; any loss or type
     drift through the text format breaks the oracle (which aggregates
     the parquet directly)."""
-    import shutil
-    import tempfile
-
     from hfsa_spark.sinks.jsonl import read_jsonl, write_jsonl_shards
 
     d = _t(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="jsonl_gate_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="jsonl_gate_", ignore_cleanup_errors=True) as out:
         write_jsonl_shards(d.select("doc_id", "text", "lang"), out, n_shards=4)
         back = read_jsonl(spark, out, schema="doc_id bigint, text string, lang string")
         return (
@@ -2295,8 +2289,6 @@ def q139_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def q140_rag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2713,9 +2705,6 @@ def q161_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings + doclen + one-row stats), then answer q155's queries from
     the index alone — pushed term filter, no corpus re-scan. Must rank
     identically to the batch scorer, so it shares q155's oracle."""
-    import shutil
-    import tempfile
-
     from hfsa_spark.sinks.inverted_index import (
         bm25_topk_indexed,
         write_inverted_index,
@@ -2724,12 +2713,9 @@ def q161_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     qs = [(0, "table"), (0, "scan"), (1, "spark"), (1, "window"),
           (2, "zzz_absent"), (2, "query")]
-    out = tempfile.mkdtemp(prefix="invidx_gate_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="invidx_gate_", ignore_cleanup_errors=True) as out:
         write_inverted_index(d, out)
         return bm25_topk_indexed(spark, out, qs, k=10).localCheckpoint()
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 _INVIDX_CACHE: dict = {}
@@ -2744,7 +2730,6 @@ def _prebuilt_inverted_index(spark: SparkSession, sf_dir: str) -> str:
     build+serve gate in the maintenance_lifecycle family)."""
     import atexit
     import shutil
-    import tempfile
 
     from hfsa_spark.sinks.inverted_index import write_inverted_index
 
@@ -2813,15 +2798,11 @@ def q164_streaming_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     served from the segmented index — which must rank EXACTLY like the
     one-pass batch index and the from-scratch scorer (shared oracle)."""
     import os
-    import tempfile
 
     from hfsa_spark.sinks.inverted_index import bm25_topk_indexed
     from hfsa_spark.streaming.index import streaming_index_maintenance
 
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="q164_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q164_", ignore_cleanup_errors=True) as tmp:
         src_dir = os.path.join(tmp, "arrivals")
         d = _t(spark, sf_dir, "documents").select("doc_id", "text")
         _stage_arrival_split(d, F.col("doc_id") % 3, 3, src_dir)
@@ -2832,22 +2813,15 @@ def q164_streaming_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         idx = os.path.join(tmp, "index")
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = streaming_index_maintenance(
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            drain(streaming_index_maintenance(
                 src, idx, checkpoint_path=os.path.join(tmp, "ck")
-            )
-            q.awaitTermination(600)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            ))
         qs = [(0, "table"), (0, "scan"), (1, "spark"), (1, "window"),
               (2, "zzz_absent"), (2, "query")]
         # localCheckpoint materializes the result, so the staged parquet
         # + checkpoint dirs can be removed before returning
         return bm25_topk_indexed(spark, idx, qs, k=10).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q165_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3539,13 +3513,10 @@ def q199_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxFilesPerTrigger=1 + staged mtimes (q164's protocol), so the
     oracle replays each segment's PSI exactly."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.streaming.drift import streaming_drift_monitor
 
-    tmp = tempfile.mkdtemp(prefix="q199_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q199_", ignore_cleanup_errors=True) as tmp:
         src_dir = os.path.join(tmp, "arrivals")
         d = _t(spark, sf_dir, "documents").select(
             "doc_id", F.col("n_chars").cast("long").alias("score")
@@ -3558,16 +3529,11 @@ def q199_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src_dir)
         )
         out = os.path.join(tmp, "monitor")
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = streaming_drift_monitor(
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            drain(streaming_drift_monitor(
                 src, ref, out, checkpoint_path=os.path.join(tmp, "ck"),
                 score_col="score", n_bins=10, lo=0, hi=600,
-            )
-            q.awaitTermination(600)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            ))
         return (
             spark.read.parquet(out)
             .select(
@@ -3578,8 +3544,6 @@ def q199_streaming_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("seg", "bin")
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q200_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3667,8 +3631,6 @@ def q211_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to q201: layout changes the PLAN, never the answer —
     the oracle IS q201's SQL."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.operators.cdc import upsert_merge
     from hfsa_spark.sinks.layout import drop_bucketed, write_bucketed
@@ -3676,19 +3638,18 @@ def q211_bucketed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="q211_")
-    try:
-        write_bucketed(od, "q211_base", os.path.join(tmp, "b"),
-                       "o_orderkey", 32)
-        base = spark.table("q211_base")
-        merged = upsert_merge(
-            base, _q201_changes(base), ["o_orderkey"], ts_col="ts",
-            seq_col="seq", null_safe_keys=False,
-        )
-        return merged.orderBy("o_orderkey").localCheckpoint()
-    finally:
-        drop_bucketed(spark, "q211_base")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="q211_", ignore_cleanup_errors=True) as tmp:
+        try:
+            write_bucketed(od, "q211_base", os.path.join(tmp, "b"),
+                           "o_orderkey", 32)
+            base = spark.table("q211_base")
+            merged = upsert_merge(
+                base, _q201_changes(base), ["o_orderkey"], ts_col="ts",
+                seq_col="seq", null_safe_keys=False,
+            )
+            return merged.orderBy("o_orderkey").localCheckpoint()
+        finally:
+            drop_bucketed(spark, "q211_base")
 
 
 def q202_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3728,9 +3689,6 @@ def q203_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     into 4 CRC32C-framed shards, read them BACK through the parser
     (every record CRC-verified), and report per-shard record/byte/id
     totals — the oracle is the doc_id%4 closed form on documents."""
-    import shutil
-    import tempfile
-
     from hfsa_spark.sinks.tfrecord import (
         read_tfrecord_shards,
         write_tfrecord_shards,
@@ -3739,9 +3697,8 @@ def q203_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000).select(
         "doc_id", "text"
     )
-    out = tempfile.mkdtemp(prefix="tfr_gate_")
     spec = {"doc_id": "int64", "text": "bytes"}
-    try:
+    with tempfile.TemporaryDirectory(prefix="tfr_gate_", ignore_cleanup_errors=True) as out:
         write_tfrecord_shards(d, out, spec, n_shards=4)
         back = read_tfrecord_shards(spark, out, spec)
         return (
@@ -3755,8 +3712,6 @@ def q203_tfrecord_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("shard")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def q204_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3782,8 +3737,6 @@ def q205_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global last-writer-wins algebra (ts strictly increases with
     batch order, so sequential apply ≡ one-shot LWW)."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.streaming.cdc import (
         init_snapshot,
@@ -3794,8 +3747,7 @@ def q205_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="q205_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q205_", ignore_cleanup_errors=True) as tmp:
         src_dir = os.path.join(tmp, "changes")
         _stage_arrival_files(_q205_change_batches(od), src_dir)
 
@@ -3809,18 +3761,14 @@ def q205_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        q = streaming_upsert_snapshots(
+        drain(streaming_upsert_snapshots(
             src,
             snap,
             os.path.join(tmp, "ckpt"),
             ["o_orderkey"],
             ts_col="ts",
             op_col="op",
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        ))
 
         final = latest_snapshot(spark, snap)
         return (
@@ -3833,8 +3781,6 @@ def q205_streaming_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderstatus")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _q205_change_batches(od: DataFrame) -> list[DataFrame]:
@@ -3882,33 +3828,30 @@ def q206_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is paid once at write time (tests/test_bucketed_layout.py
     pins the plan contract). Result: per-segment order counts/sums."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.sinks.layout import drop_bucketed, write_bucketed
 
     od = _t(spark, sf_dir, "orders")
     cu = _t(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="q206_")
-    try:
-        write_bucketed(od, "q206_orders", os.path.join(tmp, "o"), "o_custkey", 8)
-        write_bucketed(cu, "q206_customer", os.path.join(tmp, "c"), "c_custkey", 8)
-        o = spark.table("q206_orders")
-        c = spark.table("q206_customer")
-        return (
-            o.join(c, o.o_custkey == c.c_custkey)
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.floor(F.col("o_totalprice") * 100)).alias("sum_cents"),
+    with tempfile.TemporaryDirectory(prefix="q206_", ignore_cleanup_errors=True) as tmp:
+        try:
+            write_bucketed(od, "q206_orders", os.path.join(tmp, "o"), "o_custkey", 8)
+            write_bucketed(cu, "q206_customer", os.path.join(tmp, "c"), "c_custkey", 8)
+            o = spark.table("q206_orders")
+            c = spark.table("q206_customer")
+            return (
+                o.join(c, o.o_custkey == c.c_custkey)
+                .groupBy("c_mktsegment")
+                .agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    F.sum(F.floor(F.col("o_totalprice") * 100)).alias("sum_cents"),
+                )
+                .orderBy("c_mktsegment")
+                .localCheckpoint()  # materialize before tables drop
             )
-            .orderBy("c_mktsegment")
-            .localCheckpoint()  # materialize before tables drop
-        )
-    finally:
-        drop_bucketed(spark, "q206_orders")
-        drop_bucketed(spark, "q206_customer")
-        shutil.rmtree(tmp, ignore_errors=True)
+        finally:
+            drop_bucketed(spark, "q206_orders")
+            drop_bucketed(spark, "q206_customer")
 
 
 def q207_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4002,26 +3945,23 @@ def q214_bucketed_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_bucketed_layout.py). Layout changes the PLAN,
     never the answer: the oracle IS q209's SQL."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.operators.cdc import point_in_time_join
     from hfsa_spark.sinks.layout import drop_bucketed, write_bucketed
 
     od = _t(spark, sf_dir, "orders")
     intervals, facts = _q209_inputs(od)
-    tmp = tempfile.mkdtemp(prefix="q214_")
-    try:
-        write_bucketed(intervals, "q214_iv", os.path.join(tmp, "iv"),
-                       "o_orderkey", 32)
-        out = point_in_time_join(
-            facts, spark.table("q214_iv"), ["o_orderkey"],
-            null_safe_keys=False,
-        )
-        return out.orderBy("o_orderkey", "ts").localCheckpoint()
-    finally:
-        drop_bucketed(spark, "q214_iv")
-        shutil.rmtree(tmp, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="q214_", ignore_cleanup_errors=True) as tmp:
+        try:
+            write_bucketed(intervals, "q214_iv", os.path.join(tmp, "iv"),
+                           "o_orderkey", 32)
+            out = point_in_time_join(
+                facts, spark.table("q214_iv"), ["o_orderkey"],
+                null_safe_keys=False,
+            )
+            return out.orderBy("o_orderkey", "ts").localCheckpoint()
+        finally:
+            drop_bucketed(spark, "q214_iv")
 
 
 def q210_streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4033,8 +3973,6 @@ def q210_streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vector, centroids), so the streaming-built index must answer
     EXACTLY like q39's one-shot IVF; the oracle is q39's SQL."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.operators.similarity import ivf_topk_indexed
     from hfsa_spark.streaming.vectors import (
@@ -4043,8 +3981,7 @@ def q210_streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="q210_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q210_", ignore_cleanup_errors=True) as tmp:
         src_dir = os.path.join(tmp, "arrivals")
         _stage_arrival_split(
             emb.select("vec_id", "embedding"), F.col("vec_id") % 3, 3, src_dir
@@ -4056,11 +3993,7 @@ def q210_streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        q = streaming_ivf_index(src, idx, os.path.join(tmp, "ckpt"))
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        drain(streaming_ivf_index(src, idx, os.path.join(tmp, "ckpt")))
 
         qs = emb.filter(F.col("vec_id").isin(0, 1, 2))
         return (
@@ -4069,8 +4002,6 @@ def q210_streaming_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q212_streaming_cdc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4082,8 +4013,6 @@ def q212_streaming_cdc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scripts/cdc_cow_probe.py). COW granularity changes the write volume,
     never the answer: the oracle IS q205's one-shot last-writer-wins SQL."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.streaming.cdc import (
         init_snapshot_bucketed,
@@ -4094,8 +4023,7 @@ def q212_streaming_cdc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="q212_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q212_", ignore_cleanup_errors=True) as tmp:
         src_dir = os.path.join(tmp, "changes")
         _stage_arrival_files(_q205_change_batches(od), src_dir)
 
@@ -4109,13 +4037,9 @@ def q212_streaming_cdc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        q = streaming_upsert_snapshots_bucketed(
+        drain(streaming_upsert_snapshots_bucketed(
             src, snap, os.path.join(tmp, "ckpt"), ts_col="ts", op_col="op"
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        ))
 
         final = latest_snapshot_bucketed(spark, snap)
         return (
@@ -4128,8 +4052,6 @@ def q212_streaming_cdc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderstatus")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q217_bucketed_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4146,8 +4068,6 @@ def q217_bucketed_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot last-writer-wins merge in SQL. Grouped by floor(score)
     (-1 = the old-era NULL rows) so the hash covers both eras."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.streaming.cdc import (
         apply_change_batch_bucketed,
@@ -4159,8 +4079,7 @@ def q217_bucketed_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="q217_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q217_", ignore_cleanup_errors=True) as tmp:
         snap = os.path.join(tmp, "snap")
         init_snapshot_bucketed(od, snap, ["o_orderkey"], n_buckets=16)
         b0 = od.filter(F.col("o_orderkey") % 9 == 0).select(
@@ -4198,8 +4117,6 @@ def q217_bucketed_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("score_grp")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q215_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4214,8 +4131,6 @@ def q215_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     one oracle pins the whole trio (q205 snapshot-COW, q212 bucket-COW,
     q215 merge-on-read) value-identical."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.streaming.cdc import (
         init_base,
@@ -4226,8 +4141,7 @@ def q215_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    tmp = tempfile.mkdtemp(prefix="q215_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q215_", ignore_cleanup_errors=True) as tmp:
         src_dir = os.path.join(tmp, "changes")
         _stage_arrival_files(_q205_change_batches(od), src_dir)
         tdir = os.path.join(tmp, "table")
@@ -4240,14 +4154,10 @@ def q215_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-        q = streaming_append_segments(
+        drain(streaming_append_segments(
             src, tdir, os.path.join(tmp, "ckpt"), ["o_orderkey"],
             ts_col="ts", op_col="op",
-        )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
+        ))
 
         final = read_merged(spark, tdir, ["o_orderkey"])
         return (
@@ -4260,8 +4170,6 @@ def q215_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderstatus")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q216_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4302,8 +4210,6 @@ def q213_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMPACTED index. Compaction changes LAYOUT, never content: the
     oracle is q39's SQL."""
     import os
-    import shutil
-    import tempfile
 
     from hfsa_spark.operators.similarity import (
         _collect_centroids,
@@ -4316,8 +4222,7 @@ def q213_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="q213_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q213_", ignore_cleanup_errors=True) as tmp:
         idx = os.path.join(tmp, "ivf")
         init_ivf_index(emb.filter(F.col("vec_id") % 25 == 0), idx)
         # frozen centroids: collect ONCE for all backfill batches (the
@@ -4344,8 +4249,6 @@ def q213_ivf_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank")
             .localCheckpoint()  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stage_arrival_file(
@@ -4444,43 +4347,38 @@ def q93_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics: per digest, the keeper is the minimum (arrival_batch,
     doc_id)."""
     import os
-    import tempfile
 
     from hfsa_spark.streaming.ingest import streaming_ingest_dedup
 
-    tmp = tempfile.mkdtemp(prefix="q93_")
-    src_dir = os.path.join(tmp, "arrivals")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang", "n_chars")
-    _stage_arrival_split(d, F.col("doc_id") % 3, 3, src_dir)
+    with tempfile.TemporaryDirectory(prefix="q93_", ignore_cleanup_errors=True) as tmp:
+        src_dir = os.path.join(tmp, "arrivals")
+        d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang", "n_chars")
+        _stage_arrival_split(d, F.col("doc_id") % 3, 3, src_dir)
 
-    src = (
-        spark.readStream.schema("doc_id bigint, text string, lang string, n_chars bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    corpus_path = os.path.join(tmp, "corpus")
-    # streaming state/shuffle partitions sized to the gate workload (the
-    # per-partition state-store + commit overhead dominates at this scale;
-    # 32 -> 8 measured 5.1 s -> 3.5 s); a production stream sizes UP with
-    # key cardinality instead
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = streaming_ingest_dedup(
-            src,
-            index_path=os.path.join(tmp, "index"),
-            corpus_path=corpus_path,
-            checkpoint_path=os.path.join(tmp, "ck"),
+        src = (
+            spark.readStream.schema("doc_id bigint, text string, lang string, n_chars bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
         )
-        q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    corpus = spark.read.parquet(corpus_path)
-    return (
-        corpus.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
-        .orderBy("lang")
-    )
+        corpus_path = os.path.join(tmp, "corpus")
+        # streaming state/shuffle partitions sized to the gate workload (the
+        # per-partition state-store + commit overhead dominates at this scale;
+        # 32 -> 8 measured 5.1 s -> 3.5 s); a production stream sizes UP with
+        # key cardinality instead
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            drain(streaming_ingest_dedup(
+                src,
+                index_path=os.path.join(tmp, "index"),
+                corpus_path=corpus_path,
+                checkpoint_path=os.path.join(tmp, "ck"),
+            ))
+        corpus = spark.read.parquet(corpus_path)
+        return (
+            corpus.groupBy("lang")
+            .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
+            .orderBy("lang")
+            .localCheckpoint()  # materialize before the tmp dir vanishes
+        )
 
 
 def q94_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4492,69 +4390,64 @@ def q94_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing is dropped and the closed-input result equals the batch
     inequality join the oracle runs."""
     import os
-    import tempfile
 
     from hfsa_spark.streaming.joins import stream_stream_interval_join
 
-    tmp = tempfile.mkdtemp(prefix="q94_")
-    ev = _events(spark, sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    cdir, pdir = os.path.join(tmp, "clicks"), os.path.join(tmp, "purchases")
-    # NULL-ts rows get a NULL seq -> the Hive default partition, which the
-    # staging move never picks up: exactly the old two-filter drop semantics
-    for df, dst in ((clicks, cdir), (purchases, pdir)):
-        _stage_arrival_split(
-            df,
-            F.when(F.col("ts") < split, 0).when(F.col("ts") >= split, 1),
-            2,
-            dst,
-        )
+    with tempfile.TemporaryDirectory(prefix="q94_", ignore_cleanup_errors=True) as tmp:
+        ev = _events(spark, sf_dir)
+        clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
+        purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
+        split = F.lit("2024-01-16 00:00:00").cast("timestamp")
+        cdir, pdir = os.path.join(tmp, "clicks"), os.path.join(tmp, "purchases")
+        # NULL-ts rows get a NULL seq -> the Hive default partition, which the
+        # staging move never picks up: exactly the old two-filter drop semantics
+        for df, dst in ((clicks, cdir), (purchases, pdir)):
+            _stage_arrival_split(
+                df,
+                F.when(F.col("ts") < split, 0).when(F.col("ts") >= split, 1),
+                2,
+                dst,
+            )
 
-    c_stream = (
-        spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(cdir)
-    )
-    p_stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(pdir)
-    )
-    joined = stream_stream_interval_join(
-        c_stream, p_stream, ts_col="ts", by_cols=["user_id"],
-        lower_seconds=0, upper_seconds=3600, watermark="60 days",
-    )
-    out_path = os.path.join(tmp, "pairs")
-    # state partitions sized to the gate workload (32 -> 8 measured
-    # 8.4 s -> 3.9 s; r12: 8 -> 4 measured 4.4 s -> 3.8 s, and 2 regresses
-    # to 4.4 s — per-partition state-store overhead dominates down to the
-    # point where batch compute loses parallelism)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_path)
-            .option("checkpointLocation", os.path.join(tmp, "ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        c_stream = (
+            spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(cdir)
         )
-        q.awaitTermination(600)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    pairs = spark.read.parquet(out_path)
-    return (
-        pairs.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.countDistinct("event_id").alias("n_clicks"),
-            F.sum(F.col("value_r").cast(_DEC)).cast("double").alias("sum_value"),
+        p_stream = (
+            spark.readStream.schema("user_id bigint, ts timestamp, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(pdir)
         )
-        .orderBy("user_id")
-    )
+        joined = stream_stream_interval_join(
+            c_stream, p_stream, ts_col="ts", by_cols=["user_id"],
+            lower_seconds=0, upper_seconds=3600, watermark="60 days",
+        )
+        out_path = os.path.join(tmp, "pairs")
+        # state partitions sized to the gate workload (32 -> 8 measured
+        # 8.4 s -> 3.9 s; r12: 8 -> 4 measured 4.4 s -> 3.8 s, and 2 regresses
+        # to 4.4 s — per-partition state-store overhead dominates down to the
+        # point where batch compute loses parallelism)
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            drain(
+                joined.writeStream.format("parquet")
+                .option("path", out_path)
+                .option("checkpointLocation", os.path.join(tmp, "ck"))
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+        pairs = spark.read.parquet(out_path)
+        return (
+            pairs.groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                F.countDistinct("event_id").alias("n_clicks"),
+                F.sum(F.col("value_r").cast(_DEC)).cast("double").alias("sum_value"),
+            )
+            .orderBy("user_id")
+            .localCheckpoint()  # materialize before the tmp dir vanishes
+        )
 
 
 def q95_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

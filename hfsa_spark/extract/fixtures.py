@@ -43,10 +43,6 @@ def _blocks(size: int, block_size: int = DEFAULT_BLOCK_SIZE, first_block_id: int
     return out
 
 
-def _num_blocks(size: int, block_size: int = DEFAULT_BLOCK_SIZE) -> int:
-    return 0 if size <= 0 else (size + block_size - 1) // block_size
-
-
 class _TreeBuilder:
     """Accumulates dir/file rows with paths resolved driver-side."""
 

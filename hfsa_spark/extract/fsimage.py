@@ -1241,7 +1241,7 @@ def format_inode_proto(row: dict) -> str:
 
 def _index_rows(rows: list[dict]) -> tuple[dict, dict]:
     """(by_id, by_path) lookup indexes over parsed raw rows. A row whose
-    path does not resolve (dangling parent, cycle) is reachable by id only,
+    path does not resolve (orphan, dangling parent, cycle) is reachable by id only,
     as it is absent from the loaded table."""
     by_id = {r["id"]: r for r in rows}
     by_path = {full_path: rows[i]["id"] for i, _, full_path, _ in resolve_paths(rows)}

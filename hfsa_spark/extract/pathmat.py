@@ -17,11 +17,12 @@ rows picks between them:
   image past 64 MiB of INODE section), where no O(#inodes) driver structure
   exists: an iterative level-join over the (id, parent_id, name) edge set.
 
-Semantics (both): a row is a root when ``parent_id`` is NULL or ``id`` is
-``ROOT_INODE_ID`` and gets ``("/", "/", 0)``; a child of ``/`` is ``/name``,
-any other child ``parent/name``; a row whose parent never resolves
-(dangling parent or cycle) or that lies deeper than ``MAX_NAMESPACE_DEPTH``
-is dropped.
+Semantics (both): the one root is the row whose ``id`` is ``ROOT_INODE_ID``,
+and it gets ``("/", "/", 0)``; a child of ``/`` is ``/name``, any other
+child ``parent/name``. Like hfsa's visitor, which walks the tree from ``/``
+(FsVisitor.java:92-159), a row that is not reached from the root is dropped:
+an orphan that no directory lists (``parent_id`` NULL), a dangling parent,
+a cycle, or a row deeper than ``MAX_NAMESPACE_DEPTH``.
 
 Scale notes for the level-join (100 TB namespaces, ~10^9 inodes):
 * the input is materialized once, so each level re-reads resolved rows, not
@@ -55,14 +56,14 @@ def resolve_paths(
     rows: list[dict], max_depth: int = MAX_NAMESPACE_DEPTH
 ) -> list[tuple[int, str, str, int]]:
     """Driver-side twin of :func:`materialize_paths` over parsed row dicts
-    carrying (id, parent_id, name): a BFS from the roots through a
+    carrying (id, parent_id, name): a BFS from the root through a
     parent → children index. Returns ``(row index, path, full_path, depth)``
     in BFS order, one entry per row :func:`materialize_paths` would emit
     (unresolvable and too-deep rows have none)."""
     children: dict[int, list[int]] = {}
     frontier = []
     for i, r in enumerate(rows):
-        if r["parent_id"] is None or r["id"] == ROOT_INODE_ID:
+        if r["id"] == ROOT_INODE_ID:
             frontier.append((i, "/", "/", 0))
         else:
             children.setdefault(r["parent_id"], []).append(i)
@@ -91,7 +92,7 @@ def materialize_paths(raw: DataFrame, max_depth: int = MAX_NAMESPACE_DEPTH) -> D
     payload_cols = [c for c in raw.columns if c not in ("path", "full_path", "depth")]
     nodes = raw.select(*payload_cols).localCheckpoint(eager=True)
 
-    is_root = F.col("parent_id").isNull() | (F.col("id") == ROOT_INODE_ID)
+    is_root = F.col("id") == ROOT_INODE_ID
     root = nodes.filter(is_root).select(
         *payload_cols,
         F.lit("/").alias("path"),

@@ -24,12 +24,6 @@ def portable_hash64(c: Column | str, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def portable_hash64_sql(expr: str, seed: int | None = None) -> str:
-    """The DuckDB-side twin of :func:`portable_hash64` for oracle SQL."""
-    inner = f"concat('{seed}:', {expr})" if seed is not None else expr
-    return f"(('0x' || substr(md5({inner}), 1, 15))::BIGINT)"
-
-
 def portable_hash_hex(c: Column | str, seed: int | None = None, length: int = 16) -> Column:
     """Fixed-width lowercase hex hash string; lexicographic min == numeric
     min, so ``min()`` over these is engine-portable."""
@@ -37,8 +31,3 @@ def portable_hash_hex(c: Column | str, seed: int | None = None, length: int = 16
     if seed is not None:
         col = F.concat(F.lit(f"{seed}:"), col)
     return F.substring(F.md5(col), 1, length)
-
-
-def portable_hash_hex_sql(expr: str, seed: int | None = None, length: int = 16) -> str:
-    inner = f"concat('{seed}:', {expr})" if seed is not None else expr
-    return f"substr(md5({inner}), 1, {length})"

@@ -9,10 +9,35 @@ into assertions (used by tests/test_plans.py and ad-hoc tuning).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
-# driver_listing nesting depth (single-threaded driver use; see its docstring)
-_DRIVER_LISTING_DEPTH = 0
+# Spark lists file-source partitions with a parallel job past this many
+# directories; driver_listing() raises it to keep the listing on the driver
+DRIVER_LISTING_THRESHOLD = 16384
+
+
+@contextmanager
+def session_conf(spark, conf: dict[str, str]):
+    """Context manager: set the session confs in ``conf`` inside the block
+    and put each back on exit, to its prior value or unset if it had none.
+
+    Each block snapshots what it found, so nested blocks unwind in order
+    without a counter. The confs are SESSION-wide: anything planned while
+    the block is held sees them, so hold the block only around work that
+    needs it (a gate holds it until its stream has stopped)."""
+    prior = {key: spark.conf.get(key, None) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in prior.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def parallelize_compute(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -37,51 +62,30 @@ def parallelize_compute(df: DataFrame, min_partitions: int | None = None) -> Dat
     return df
 
 
-def driver_listing(spark, threshold: int = 16384):
+def driver_listing(spark):
     """Context manager: list file-source partitions on the DRIVER while
-    inside the block (raises ``parallelPartitionDiscovery.threshold``,
-    restores on exit).
+    inside the block (a :func:`session_conf` on
+    ``parallelPartitionDiscovery.threshold``).
 
     Spark launches a parallel listing JOB once a read spans more than 32
     directories; for a driver-local / POSIX index of O(100) partition
     dirs that job costs 3 orders of magnitude more than a sequential
     driver walk (measured on the q210 segmented IVF index: three 80-path
-    listing jobs, 1.17 s of a 6.9 s query). The default threshold here
+    listing jobs, 1.17 s of a 6.9 s query). ``DRIVER_LISTING_THRESHOLD``
     still falls back to the distributed listing beyond ~16k dirs — the
-    object-store regime where the parallel job IS the right call; pass a
-    lower ``threshold`` (or don't use this helper) in such deployments.
+    object-store regime where the parallel job IS the right call; where
+    it pays off sooner (a remote object store), don't use this helper.
 
-    Caveats (ADVICE r12): the conf is SESSION-wide — another query
+    Caveat (ADVICE r12): the conf is SESSION-wide — another query
     planning a file-source read concurrently (e.g. an active streaming
     query's micro-batch planning) would see the raised threshold while
     the block is held, so call sites must run while no stream is active
-    (all current ones do). Nested use is guarded by a depth counter: only
-    the outermost block snapshots and restores, so an inner block cannot
-    clobber the outer caller's restore value.
+    (all current ones do).
     """
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _ctx():
-        global _DRIVER_LISTING_DEPTH
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        if _DRIVER_LISTING_DEPTH > 0:
-            _DRIVER_LISTING_DEPTH += 1
-            try:
-                yield
-            finally:
-                _DRIVER_LISTING_DEPTH -= 1
-            return
-        prev = spark.conf.get(key)
-        _DRIVER_LISTING_DEPTH = 1
-        spark.conf.set(key, str(threshold))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, prev)
-            _DRIVER_LISTING_DEPTH = 0
-
-    return _ctx()
+    return session_conf(
+        spark,
+        {"spark.sql.sources.parallelPartitionDiscovery.threshold": str(DRIVER_LISTING_THRESHOLD)},
+    )
 
 
 def scan_width(df: DataFrame, target_bytes: int = 32 << 20) -> int:
@@ -182,15 +186,6 @@ def read_schema_columns(df: DataFrame) -> list[str]:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df, "simple")
-
-
-def partial_agg_before_exchange(df: DataFrame) -> bool:
-    """Map-side combine check: a partial HashAggregate must appear below the
-    first Exchange (bounds shuffle volume by distinct keys, not rows)."""
-    # formatted mode prints aggregate modes explicitly; the presence of a
-    # partial_ aggregate anywhere in the plan is the decisive signal (Spark
-    # only emits partial modes below their Final counterpart's Exchange)
-    return "partial_" in explain_str(df, "formatted")
 
 
 def num_exchanges(df: DataFrame) -> int:

@@ -3,6 +3,15 @@
 The reference is strictly batch over an immutable snapshot (SURVEY.md
 §2.10) — streaming here is the beyond-reference growth path: a directory of
 successive fsimage extracts (or an events stream) processed incrementally.
+
+Every gate runs a stream through one lifecycle. The query is started with
+``trigger(availableNow=True)``, so it ends once it has processed what has
+arrived. :func:`~hfsa_spark.streaming.run.drain` waits for that end, raises
+on a timeout or a stream error, and always stops the query. A session conf
+the stream needs (a state-partition count, say) is held with
+:func:`hfsa_spark.plans.session_conf` until the stream has stopped. Scratch
+space is a ``tempfile.TemporaryDirectory``, and the result is materialized
+(``localCheckpoint``) before that directory goes.
 """
 
 from hfsa_spark.streaming.snapshots import (

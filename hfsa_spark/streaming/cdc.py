@@ -176,8 +176,8 @@ def streaming_upsert_snapshots(
     evolve_schema: bool = False,
 ):
     """Wire a streaming change feed into the versioned-snapshot apply
-    loop. Returns the started StreamingQuery (caller awaits/stops).
-    ``init_snapshot`` must have committed version 0 first.
+    loop. Returns the started StreamingQuery, which the caller drains
+    (``run.drain``). ``init_snapshot`` must have committed version 0 first.
     ``evolve_schema`` passes through to :func:`apply_change_batch`."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:

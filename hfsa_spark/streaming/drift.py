@@ -52,11 +52,10 @@ def streaming_drift_monitor(
     n_bins: int = 10,
     lo: int = 0,
     hi: int = 1000000,
-    trigger_available_now: bool = True,
 ):
     """Run segment-per-batch PSI monitoring over a streaming DataFrame
-    against a frozen reference. Returns the started StreamingQuery
-    (caller awaits/stops it). ``ref`` must be a static DataFrame; it is
+    against a frozen reference. Returns the started StreamingQuery, which
+    the caller drains (``run.drain``). ``ref`` must be a static DataFrame; it is
     re-histogrammed per batch (≤ n_bins aggregate rows — cheap), keeping
     the monitor stateless and the state store empty."""
 
@@ -66,12 +65,12 @@ def streaming_drift_monitor(
             score_col=score_col, n_bins=n_bins, lo=lo, hi=hi,
         )
 
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_drift_monitor(spark, out_dir: str) -> DataFrame:

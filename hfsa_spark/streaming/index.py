@@ -33,10 +33,10 @@ def streaming_index_maintenance(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_shards: int = 4,
-    trigger_available_now: bool = True,
 ):
     """Run segment-per-batch index maintenance over a streaming DataFrame.
-    Returns the started StreamingQuery (caller awaits/stops it)."""
+    Returns the started StreamingQuery, which the caller drains
+    (``run.drain``)."""
 
     def step(batch: DataFrame, batch_id: int) -> None:
         # tokenize fan-out sized from the batch's input bytes (r12): a
@@ -48,9 +48,9 @@ def streaming_index_maintenance(
             n_shards=n_shards, fanout=scan_width(batch, target_bytes=8 << 20),
         )
 
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -117,10 +117,9 @@ def streaming_ingest_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     partition_by: list[str] | None = None,
-    trigger_available_now: bool = True,
 ):
     """Run the ingestion loop over a streaming DataFrame. Returns the
-    started StreamingQuery (caller awaits/stops it)."""
+    started StreamingQuery, which the caller drains (``run.drain``)."""
 
     def step(batch: DataFrame, batch_id: int) -> None:
         ingest_batch(
@@ -129,9 +128,9 @@ def streaming_ingest_dedup(
             batch_id=batch_id,
         )
 
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -6,7 +6,8 @@ route's executor decode + ``materialize_paths`` level-join, and
 ``materialize_paths`` over the driver parse. The image carries the shapes
 where they could part: files in ``/``, a deep directory chain, an empty
 directory, a symlink, and an orphan inode that no INODE_DIR entry lists
-(it parses with ``parent_id=None``, so it is a root).
+(it parses with ``parent_id=None``; only ``ROOT_INODE_ID`` is a root, so
+no resolver reaches it and it is absent from the table).
 
 This is a round-trip check of the writer/decoder pair, not the reference
 differential (tests/test_fsimage.py, which needs the reference images).
@@ -87,7 +88,7 @@ def test_driver_distributed_and_levels_agree(spark, tmp_path, monkeypatch):
         m.setattr(type(raw), "isEmpty", lambda self: pytest.fail("isEmpty job"))
         levels = finalize_inodes(materialize_paths(raw)).select(cols)
 
-    assert driver.count() == len(rows)
+    assert driver.count() == len(rows) - 1  # all but the orphan
     assert _equal(driver, dist)
     assert _equal(driver, levels)
 
@@ -98,7 +99,7 @@ def test_driver_distributed_and_levels_agree(spark, tmp_path, monkeypatch):
     assert got[16386] == ("/", "/top.txt", 1)
     assert got[16388] == ("/", "/emptydir", 1)
     assert got[16421] == ("/c1", "/c1/link", 2)
-    assert got[16430] == ("/", "/", 0)  # the orphan is a root
+    assert 16430 not in got  # the orphan is absent, not a second root
     assert got[ROOT] == ("/", "/", 0)
 
 
@@ -131,6 +132,8 @@ def test_text_dump_and_acl_skip_unresolvable_rows(spark, tmp_path):
     img = str(tmp_path / "dangling.img")
     write_fsimage(img, rows)
 
+    assert inode_text_dump(img, ["/"]).startswith(f"type: DIRECTORY\nid: {ROOT}\n")
+    assert inode_text_dump(img, ["16430"]).startswith("type: FILE\nid: 16430\n")
     assert inode_text_dump(img, ["16500"]).startswith("type: FILE\nid: 16500\n")
     assert inode_text_dump(img, ["/dangling.txt"]) == "No inode found for /dangling.txt\n"
     assert 'name: "link"' in inode_text_dump(img, ["/c1/link"])
@@ -140,7 +143,7 @@ def test_text_dump_and_acl_skip_unresolvable_rows(spark, tmp_path):
         get_acl_entries(img, "/cyc_a")
 
     ids = {r.id for r in load_fsimage(spark, img, distributed=False).select("id").collect()}
-    assert ids == {r["id"] for r in _namespace()}
+    assert ids == {r["id"] for r in _namespace()} - {16430}
 
 
 def test_distributed_scratch_leaves_no_file_in_tmpdir(spark, tmp_path):
@@ -150,5 +153,5 @@ def test_distributed_scratch_leaves_no_file_in_tmpdir(spark, tmp_path):
     write_fsimage(img, _namespace(), codec="gzip")
     pattern = os.path.join(tempfile.gettempdir(), "hfsa_decomp_*")
     before = set(glob.glob(pattern))
-    assert load_fsimage(spark, img, distributed=True).count() == len(_namespace())
+    assert load_fsimage(spark, img, distributed=True).count() == len(_namespace()) - 1
     assert set(glob.glob(pattern)) <= before

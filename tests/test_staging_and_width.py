@@ -124,3 +124,9 @@ def test_driver_listing_restores_conf_and_preserves_results(spark, tmp_path):
         got = sorted(r["v"] for r in spark.read.parquet(p).collect())
     assert spark.conf.get(key) == before
     assert got == list(range(200))
+    # nested: the inner block must not end the outer one's scope
+    with driver_listing(spark):
+        with driver_listing(spark):
+            assert spark.conf.get(key) == "16384"
+        assert spark.conf.get(key) == "16384"
+    assert spark.conf.get(key) == before

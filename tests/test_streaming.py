@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from hfsa_spark.streaming.run import drain
 from hfsa_spark.streaming.snapshots import (
     sessionize_events,
     snapshot_growth_report,
@@ -42,7 +43,7 @@ def test_streaming_matches_batch(spark, tmp_path):
     q = streaming_windowed_counts_query(
         spark, src, _SCHEMA, ckpt, sink, window_duration="1 hour"
     )
-    q.awaitTermination(120)
+    drain(q)
 
     streamed = spark.read.parquet(sink)
     batch = windowed_event_counts(events, "1 hour", watermark=None)

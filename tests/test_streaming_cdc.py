@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import time
 
+from hfsa_spark.streaming.run import drain
+
 SCHEMA = "k bigint, v string, op string, ts int"
 
 
@@ -80,10 +82,7 @@ def test_streaming_lifecycle(spark, tmp_path):
     q = streaming_upsert_snapshots(
         src, snap, str(tmp_path / "ckpt"), ["k"], ts_col="ts", op_col="op"
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
+    drain(q)
 
     got = {r["k"]: r["v"] for r in latest_snapshot(spark, snap).collect()}
     # 1:a untouched, 2 updated, 3 deleted in batch 2, 4 inserted then
@@ -487,10 +486,7 @@ def test_merge_on_read_streaming_lifecycle(spark, tmp_path):
     q = streaming_append_segments(
         src, tdir, str(tmp_path / "ckpt"), ["k"], ts_col="ts", op_col="op"
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
+    drain(q)
     got = {
         r["k"]: r["v"] for r in read_merged(spark, tdir, ["k"]).collect()
     }
@@ -519,10 +515,7 @@ def test_bucketed_streaming_lifecycle(spark, tmp_path):
     q = streaming_upsert_snapshots_bucketed(
         src, snap, str(tmp_path / "ckpt"), ts_col="ts", op_col="op"
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        q.stop()
+    drain(q)
 
     got = {
         r["k"]: r["v"] for r in latest_snapshot_bucketed(spark, snap).collect()

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+from hfsa_spark.streaming.run import drain
+
 
 def _write_file(spark, base, idx, rows):
     spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1).write.parquet(
@@ -79,7 +81,7 @@ def test_streaming_ingest_dedup_pipeline(spark, tmp_path):
     q = streaming_ingest_dedup(
         src, index_path, corpus_path, checkpoint_path=str(tmp_path / "ck")
     )
-    q.awaitTermination(180)
+    drain(q)
 
     corpus = spark.read.parquet(corpus_path)
     kept = sorted(r["doc_id"] for r in corpus.collect())

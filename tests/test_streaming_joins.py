@@ -10,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 from hfsa_spark.streaming.joins import stream_stream_interval_join
+from hfsa_spark.streaming.run import drain
 
 
 def _write_file(spark, base, idx, rows, schema):
@@ -64,7 +65,7 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
 
     got = sorted(
         (r["event_id"], r["event_id_r"])
