@@ -129,7 +129,6 @@ def main(argv: list[str] | None = None) -> int:
                 inodes, dir=d, limit_bytes=parse_iec(args.fsl),
                 user_filter=args.user_filter,
                 hotspot_limit=args.uphl, user_hotspot_limit=args.uphl,
-                persist=True,  # all four branches are collected below
             )
             sink = {
                 "txt": lambda r: small_files_txt(r, hotspot_limit=args.uphl),
@@ -137,7 +136,6 @@ def main(argv: list[str] | None = None) -> int:
                 "json": small_files_json,
             }[args.output]
             out.write(sink(rep))
-            rep.unpersist()
     elif cmd in ("userusage", "uu"):
         from hfsa_spark.operators.userusage import user_usage_report
         from hfsa_spark.sinks import user_usage_csv, user_usage_json, user_usage_txt

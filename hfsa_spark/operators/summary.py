@@ -11,6 +11,12 @@ partial aggregation, exactly replacing the reference's
 46-bucket histogram is 46 conditional sums (codegen'd, no UDF); unused high
 buckets are trimmed at display time (dynamic bucket count,
 SizeBucket.java:124-141).
+
+One action per report: ``SummaryReport.collect()`` runs that aggregate once
+and returns users + groups + 1 plain rows; the txt/csv/json sinks split,
+count and sort them on the driver. The result is bounded by the number of
+principals, not by the namespace size. The DataFrame fields stay for
+callers that compose them (q18, bench.py).
 """
 
 from __future__ import annotations
@@ -18,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from enum import Enum
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from hfsa_spark.functions.buckets import size_bucket, MAX_BUCKETS
@@ -43,12 +49,55 @@ class SummarySort(Enum):
         }[self.value]
 
 
+STAT_COLS = [
+    "sum_directories",
+    "sum_symlinks",
+    "sum_files",
+    "sum_file_size",
+    "sum_consumed_size",
+    "sum_blocks",
+    "size_buckets",
+]
+
+
+def asc_key(name: str | None) -> tuple[bool, str]:
+    """Spark's ascending string order: nulls first, then UTF-8 bytes —
+    which is code-point order, i.e. Python's ``str`` comparison."""
+    return (name is not None, name or "")
+
+
 @dataclass
 class SummaryReport:
     dir: str
     overall: DataFrame  # 1 row incl. distinct user/group counts
     by_group: DataFrame
     by_user: DataFrame
+    sort: SummarySort
+    # the GROUPING SETS rows (__gid 1 user, 2 group, 3 overall) plus the
+    # user-filter flag __keep — what collect() fetches in one action
+    rows: DataFrame
+
+    def collect(self) -> tuple[dict, list[Row], list[Row]]:
+        """``(overall, groups, users)`` from ONE Spark action, sorted by
+        (sort column, name) ascending like ``by_group``/``by_user``.
+
+        ``overall`` carries ``num_groups``/``num_users``: the non-null names
+        among ALL grouping rows (``count(distinct)`` ignores nulls), so the
+        user filter does not change ``num_users``."""
+        rows = self.rows.collect()
+
+        def part(gid: int, name: str) -> list[Row]:
+            got = [r for r in rows if r["__gid"] == gid]
+            return sorted(got, key=lambda r: (r[self.sort.column], *asc_key(r[name])))
+
+        groups, all_users = part(2, "group"), part(1, "user")
+        top = part(3, "user")[0]  # IndexError on an empty scope, like overall.collect()[0]
+        overall = {
+            "num_groups": sum(r["group"] is not None for r in groups),
+            "num_users": sum(r["user"] is not None for r in all_users),
+            **{c: top[c] for c in STAT_COLS},
+        }
+        return overall, groups, [r for r in all_users if r["__keep"]]
 
 
 def _stat_aggs(num_buckets: int) -> list:
@@ -97,36 +146,28 @@ def summary_report(
         )
     )
 
-    stat_cols = [
-        "sum_directories",
-        "sum_symlinks",
-        "sum_files",
-        "sum_file_size",
-        "sum_consumed_size",
-        "sum_blocks",
-        "size_buckets",
-    ]
-    # distinct user/group counts only exist on the overall row — keeping
-    # countDistinct OUT of the shared agg spares by_user/by_group the
-    # distinct-rewrite Expand (an extra pass over every grouping set)
-    distinct_counts = scoped.agg(
-        F.expr("count(distinct user) as num_users"),
-        F.expr("count(distinct `group`) as num_groups"),
-    )
-    overall = (
-        grouped.filter(F.col("__gid") == 3)
-        .crossJoin(F.broadcast(distinct_counts))
-        .select("num_groups", "num_users", *stat_cols)
-    )
+    # num_users / num_groups are counted off the grouping rows themselves,
+    # and the overall row picked by its __gid: no second aggregate
+    overall = grouped.agg(
+        F.expr("count_if(__gid = 2 and `group` is not null)").alias("num_groups"),
+        F.expr("count_if(__gid = 1 and user is not null)").alias("num_users"),
+        *[F.expr(f"max_by({c}, __gid)").alias(c) for c in STAT_COLS],
+    ).filter(F.col("sum_directories").isNotNull())  # no rows on an empty scope
     by_group = (
         grouped.filter(F.col("__gid") == 2)
-        .select(F.col("group"), *stat_cols)
+        .select(F.col("group"), *STAT_COLS)
         .orderBy(F.col(sort.column).asc(), F.col("group").asc())
     )
-    by_user = grouped.filter(F.col("__gid") == 1).select(F.col("user"), *stat_cols)
-    if user_filter:
-        # substring match (java Matcher.find) == unanchored rlike
-        by_user = by_user.filter(F.col("user").rlike(user_filter))
-    by_user = by_user.orderBy(F.col(sort.column).asc(), F.col("user").asc())
+    # substring match (java Matcher.find) == unanchored rlike; evaluated in
+    # Spark so the pattern keeps Java regex semantics
+    keep = F.col("user").rlike(user_filter) if user_filter else F.lit(True)
+    by_user = (
+        grouped.filter((F.col("__gid") == 1) & keep)
+        .select(F.col("user"), *STAT_COLS)
+        .orderBy(F.col(sort.column).asc(), F.col("user").asc())
+    )
 
-    return SummaryReport(dir=dir, overall=overall, by_group=by_group, by_user=by_user)
+    return SummaryReport(
+        dir=dir, overall=overall, by_group=by_group, by_user=by_user, sort=sort,
+        rows=grouped.withColumn("__keep", keep),
+    )

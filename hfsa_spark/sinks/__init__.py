@@ -1,5 +1,10 @@
 """Report sinks: golden txt (S6), csv (S7), json (S8) — all driver-side
-formatting of small collected result sets; the aggregation stays in Spark."""
+formatting of small collected result sets; the aggregation stays in Spark.
+
+One Spark action per report: each summary and small-files sink formats the
+single result its report collects (``SummaryReport.collect``, the
+``SmallFilesReport.collect_*`` methods), already split into overall,
+group, user and top-N parts; the sinks only sort and print plain rows."""
 
 from hfsa_spark.sinks.csv import (
     inode_info_csv,

@@ -23,12 +23,11 @@ from __future__ import annotations
 import csv as _csv
 import io
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from hfsa_spark.functions.perms import mode_rwx_py
 from hfsa_spark.operators.smallfiles import SmallFilesReport
-from hfsa_spark.operators.summary import SummaryReport
+from hfsa_spark.operators.summary import SummaryReport, asc_key
 
 _TYPE_CHAR = {"FILE": "-", "DIRECTORY": "d", "SYMLINK": "l"}
 
@@ -56,17 +55,17 @@ def summary_csv(report: SummaryReport) -> str:
         ["Type", "Name", "Directories", "Symlinks", "Files", "Size", "Blocks",
          "Size Buckets (0B to 256MiB+)"]
     )
-    o = report.overall.collect()[0]
+    o, groups, users = report.collect()
     w.writerow(
         ["Overall", "/", o["sum_directories"], o["sum_symlinks"], o["sum_files"],
          o["sum_file_size"], o["sum_blocks"], _java_array(list(o["size_buckets"]))]
     )
-    for r in report.by_group.collect():
+    for r in groups:
         w.writerow(
             ["Group", r["group"], r["sum_directories"], r["sum_symlinks"], r["sum_files"],
              r["sum_file_size"], r["sum_blocks"], _java_array(list(r["size_buckets"]))]
         )
-    for r in report.by_user.collect():
+    for r in users:
         w.writerow(
             ["User", r["user"], r["sum_directories"], r["sum_symlinks"], r["sum_files"],
              r["sum_file_size"], r["sum_blocks"], _java_array(list(r["size_buckets"]))]
@@ -79,21 +78,13 @@ def small_files_csv(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
     hotspots (no rollup; see module docstring)."""
     buf, w = _writer()
     w.writerow(["Type", "Name", "Path", "Small Files"])
-    overall = report.overall.collect()[0]["small_files_total"]
-    w.writerow(["Overall", "/", "", overall])
-    users = report.user_summary.collect()
-    for r in users:
-        w.writerow(["User", r["user"], "", r["count"]])
-    raw = report.raw_user_path_counts
-    rank = Window.partitionBy("user").orderBy(F.col("count").desc(), F.col("path").asc())
-    top = (
-        raw.withColumn("__rn", F.row_number().over(rank))
-        .filter(F.col("__rn") <= hotspot_limit)
-        .orderBy(F.col("user").asc(), F.col("count").desc(), F.col("path").asc())
-        .collect()
-    )
-    for r in top:
-        w.writerow(["Hotspot", r["user"], r["path"], r["count"]])
+    res = report.collect_raw_top(hotspot_limit)
+    w.writerow(["Overall", "/", "", res.total])
+    for user, count in res.users:
+        w.writerow(["User", user, "", count])
+    for user in sorted(res.paths, key=asc_key):
+        for path, count in res.paths[user]:
+            w.writerow(["Hotspot", user, path, count])
     return buf.getvalue()
 
 
@@ -102,7 +93,7 @@ def user_usage_csv(rolled: DataFrame) -> str:
     UserUsageReportCommand.java:124-133); path-ordered for determinism."""
     buf, w = _writer()
     w.writerow(["Path", "Size"])
-    for r in rolled.orderBy("path").collect():
+    for r in sorted(rolled.collect(), key=lambda r: r["path"]):  # paths are unique
         w.writerow([r["path"], r["sum_size"]])
     return buf.getvalue()
 
@@ -122,6 +113,6 @@ def inode_info_csv(matched: DataFrame) -> str:
     shape pinned by CsvExportTest.java:77-89)."""
     buf, w = _writer()
     w.writerow(["ID", "Name", "Type"])
-    for r in matched.orderBy("id").collect():
+    for r in sorted(matched.collect(), key=lambda r: r["id"]):  # ids are unique
         w.writerow([r["id"], r["name"], r["type"]])
     return buf.getvalue()

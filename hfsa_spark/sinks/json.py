@@ -63,9 +63,7 @@ def _stats_json(r: Row, name_field: str | None = None, name_value: str | None = 
 
 
 def summary_json(report: SummaryReport) -> str:
-    overall = report.overall.collect()[0]
-    groups = report.by_group.collect()
-    users = report.by_user.collect()
+    overall, groups, users = report.collect()
     return _dumps(
         {
             "dirPath": report.dir,
@@ -79,30 +77,25 @@ def summary_json(report: SummaryReport) -> str:
 
 
 def small_files_json(report: SmallFilesReport) -> str:
-    overall = report.overall.collect()[0]["small_files_total"]
-    users = report.user_summary.collect()
-    raw = report.raw_user_path_counts.orderBy("user", "path").collect()
-    per_user: dict[str, dict[str, int]] = {}
-    for r in raw:
-        per_user.setdefault(r["user"], {})[r["path"]] = r["count"]
+    res = report.collect_paths()
     return _dumps(
         {
-            "sumOverallSmallFiles": overall,
-            "sumUserSmallFiles": sum(r["count"] for r in users),
+            "sumOverallSmallFiles": res.total,
+            "sumUserSmallFiles": sum(c for _, c in res.users),
             "userToReport": {
-                r["user"]: {
-                    "userName": r["user"],
-                    "sumSmallFiles": r["count"],
-                    "pathToCounter": per_user.get(r["user"], {}),
+                user: {
+                    "userName": user,
+                    "sumSmallFiles": count,
+                    "pathToCounter": dict(res.paths[user]),
                 }
-                for r in users
+                for user, count in res.users
             },
         }
     )
 
 
 def user_usage_json(rolled: DataFrame) -> str:
-    rows = rolled.orderBy("path").collect()
+    rows = sorted(rolled.collect(), key=lambda r: r["path"])  # paths are unique
     return _dumps({"pathToSize": {r["path"]: r["sum_size"] for r in rows}})
 
 
@@ -133,7 +126,7 @@ def path_report_json(report: PathReport) -> str:
 def inode_info_json(matched: DataFrame) -> str:
     """One object per matched inode; atime mirrors mtime (JsonUtil quirk)."""
     objs = []
-    for r in matched.orderBy("id").collect():
+    for r in sorted(matched.collect(), key=lambda r: r["id"]):  # ids are unique
         o: dict = {"id": r["id"], "name": r["name"]}
         perm = f"{r['user']}:{r['group']}:{mode_rwx_py(r['mode'])}"
         t = r["type"]

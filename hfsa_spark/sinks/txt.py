@@ -12,7 +12,11 @@ reports (dynamic column widths from data):
 All formatters run driver-side over collected rows: every report is a
 top-N / per-user / per-group aggregate, so the result sets are small by
 construction no matter the input scale — the heavy lifting stayed in
-Spark. Percent formatting follows the process locale's decimal separator
+Spark. One action per report: the summary and small-files formatters take
+the report's single collected result (``SummaryReport.collect``,
+``SmallFilesReport.collect_hotspots``) and do no Spark work of their own.
+
+Percent formatting follows the process locale's decimal separator
 (LC_NUMERIC), matching the reference's platform-locale behavior
 (SmallFilesReportCommandTest.java:13,54); the C-locale default '.' is
 pinned by the goldens.
@@ -29,7 +33,7 @@ from pyspark.sql import functions as F
 from hfsa_spark.functions.buckets import bucket_borders
 from hfsa_spark.functions.iec import format_iec
 from hfsa_spark.functions.perms import mode_rwx_py
-from hfsa_spark.operators.smallfiles import SmallFilesReport
+from hfsa_spark.operators.smallfiles import TOP_USERS_WITH_DETAIL, SmallFilesReport
 from hfsa_spark.operators.summary import SummaryReport
 
 # --------------------------------------------------- FormatUtil twins --
@@ -114,9 +118,7 @@ _BY_HDR_PREFIX = (
 
 def summary_txt(report: SummaryReport) -> str:
     """HDFS Summary txt (doSummary, SummaryReportCommand.java:208-283)."""
-    overall = report.overall.collect()[0]
-    groups = report.by_group.collect()
-    users = report.by_user.collect()
+    overall, groups, users = report.collect()
 
     units, widths, _n = _bucket_columns(list(overall["size_buckets"]))
     bucket_header = _bucket_header(units, widths)
@@ -169,16 +171,14 @@ def summary_txt(report: SummaryReport) -> str:
 def small_files_txt(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
     """Small files report txt (handleReport + printOverallReport +
     printUsersReport, SmallFilesReportCommand.java:161-276)."""
-    overall = report.overall.collect()[0]["small_files_total"]
-    hotspots = report.path_hotspots.collect()
-    user_rows = report.user_summary.collect()
-    detail_rows = report.user_hotspots.collect()
+    res = report.collect_hotspots()
+    overall = res.total
 
     out: list[str] = [""]
     out.append(f"Small files report (< {format_iec(report.limit_bytes)})")
     out.append("")
 
-    user_sum = sum(r["count"] for r in user_rows)
+    user_sum = sum(c for _, c in res.users)
     w = number_of_digits(overall)
     if overall != user_sum:  # user regex filtered the per-user branch
         out.append(f"Overall small files         : {overall:{w}d}")
@@ -192,23 +192,23 @@ def small_files_txt(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
     header = f"{label_count} | Path (top {hotspot_limit}) "
     out.append(header)
     out.append("-" * len(header))
-    for r in hotspots:
-        out.append(f"{r['count']:{max_w_sum}d} | {r['path']}")
+    for path, count in res.hotspots:
+        out.append(f"{count:{max_w_sum}d} | {path}")
     out.append("")
 
-    if not user_rows:
+    if not res.users:
         out.append(f"No users found in directory paths [{report.dir}]")
         return "\n".join(out) + "\n"
 
     # Username | #Small files | %
-    max_w_user = max(max(len(r["user"]) for r in user_rows), len("Username"))
-    top_count = user_rows[0]["count"]
+    max_w_user = max(max(len(u) for u, _ in res.users), len("Username"))
+    top_count = res.users[0][1]
     max_w_cnt = max(number_of_digits(top_count), len("#Small files"))
     out.append(f"{_pad_trunc('Username', max_w_user)} | {_pad_trunc('#Small files', max_w_cnt)} | %")
     out.append("-" * (max_w_user + 3 + max_w_cnt + 3 + 10))
-    for r in user_rows:
-        pct = float(r["count"]) / overall * 100.0
-        out.append(f"{r['user']:<{max_w_user}s} | {r['count']:{max_w_cnt}d} | {_fmt_pct(pct)}")
+    for user, count in res.users:
+        pct = float(count) / overall * 100.0
+        out.append(f"{user:<{max_w_user}s} | {count:{max_w_cnt}d} | {_fmt_pct(pct)}")
     out.append("")
 
     # Per-user hotspot details (top 10 users hardcoded, :235-247)
@@ -217,15 +217,10 @@ def small_files_txt(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
     sep_len = max_w_user + 3 + len(hotspot_label)
     out.append("-" * sep_len)
 
-    by_user: dict[str, list] = {}
-    for r in detail_rows:
-        by_user.setdefault(r["user"], []).append(r)
-    detail_users = [r["user"] for r in user_rows[: min(10, hotspot_limit)]]
-    for user in detail_users:
-        rows = by_user.get(user, [])
-        for i, r in enumerate(rows):
+    for user, _ in res.users[: min(TOP_USERS_WITH_DETAIL, hotspot_limit)]:
+        for i, (path, count) in enumerate(res.paths.get(user, [])):
             name = user if i == 0 else ""
-            out.append(f"{_pad_trunc(name, max_w_user)} | {r['count']:{max_w_cnt}d} | {r['path']}")
+            out.append(f"{_pad_trunc(name, max_w_user)} | {count:{max_w_cnt}d} | {path}")
         out.append("-" * sep_len)
 
     return "\n".join(out) + "\n"

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hfsa_spark.plans import explain_str, num_exchanges
+from hfsa_spark.plans import explain_str, num_exchanges, session_conf
 from hfsa_spark.tables import read_table, write_bucketed
 
 
@@ -14,13 +14,20 @@ from hfsa_spark.tables import read_table, write_bucketed
 def no_broadcast(spark):
     """Force sort-merge planning so the assertion targets bucketing, not
     the broadcast fast path these tiny fixtures would otherwise take."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        yield
+
+
+@pytest.fixture()
+def bucketed_tables(spark):
+    """Drop the managed tables the test saves, so none is left behind in
+    the warehouse directory."""
     yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    for name in ("t_docs_b", "t_toks_b"):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_bucketed_join_has_no_exchange(spark, no_broadcast):
+def test_bucketed_join_has_no_exchange(spark, no_broadcast, bucketed_tables):
     left = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 7).alias("lang_id")
     )
