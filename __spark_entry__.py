@@ -4010,8 +4010,9 @@ def q212_streaming_cdc_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned into 16 pk buckets, each micro-batch rewrites ONLY
     the buckets its keys touch and commits a manifest referencing the
     untouched ones in place (rewrite volume ∝ change rate, not corpus —
-    scripts/cdc_cow_probe.py). COW granularity changes the write volume,
-    never the answer: the oracle IS q205's one-shot last-writer-wins SQL."""
+    PERFORMANCE.md "Round-7 CDC copy-on-write granularity probe"). COW
+    granularity changes the write volume, never the answer: the oracle IS
+    q205's one-shot last-writer-wins SQL."""
     import os
 
     from hfsa_spark.streaming.cdc import (

@@ -262,8 +262,7 @@ def main() -> None:
     # host → normalized > raw (penalty): symmetric, can't be gamed by
     # picking a noisy window. Constants + model provenance live in
     # bench_constants.py (shared with scripts/merge_bench.py); the
-    # canary2 number's total credit is clamped at CANARY2_CREDIT_FLOOR
-    # until the alpha_cpu fit has more evidence points (r11).
+    # canary2 number's total credit is clamped at CANARY2_CREDIT_FLOOR.
     REF_MEMBW_GBPS = bench_constants.REF_MEMBW_GBPS
     REF_CPU_SEC = bench_constants.REF_CPU_SEC
     ALPHA_CPU = bench_constants.ALPHA_CPU
@@ -278,7 +277,7 @@ def main() -> None:
         result["canary_alpha_cpu"] = ALPHA_CPU
         result["canary2_credit_floor"] = bench_constants.CANARY2_CREDIT_FLOOR
         result["batch_mean_canary2_normalized"] = round(
-            bm * bench_constants.canary2_factor(canary, membw), 4
+            bm * bench_constants.canary2_factor(membw), 4
         )
     # Per-query anchors: BASELINE_PERQ.json freezes each query's first
     # committed min-of-N time at its introduction round (BASELINE.md's r1
@@ -317,9 +316,8 @@ def main() -> None:
             if k not in anchors:
                 continue
             a = anchors[k]
-            now_n = bench_constants.to_ref_time(v, canary, membw)
-            anch_n = bench_constants.to_ref_time(
-                a["sec"], a.get("cpu_sec"), a.get("membw_gbps"))
+            now_n = bench_constants.to_ref_time(v, membw)
+            anch_n = bench_constants.to_ref_time(a["sec"], a.get("membw_gbps"))
             if now_n > bench_constants.perq_threshold(anch_n):
                 regressions[k] = {
                     "sec": round(v, 3),

@@ -20,24 +20,7 @@ REF_MEMBW_GBPS = 2.98
 # r8 record. Round 9 proved this axis drifts independently of membw.
 REF_CPU_SEC = 0.1373
 
-# Sensitivity of batch time to the CPU-canary ratio. RETIRED to 0.0 in
-# r13 (VERDICT r12 #7, closing the carried alpha decision): the final
-# refit over ALL committed pinned-tree evidence (25 points across
-# bisect_r10/r11/r12.jsonl via scripts/fit_alpha.py; 22 included, 12+
-# clean sub-0.5%-steal windows — the evidence bar the r12 plan set) puts
-# the LS at 0.863 but with a point band of [0.23, 2.42] under the linear
-# membw treatment and [0.07, 1.55] under the banded one — the term is
-# real but steal-confounded and cannot be pinned tighter than a factor
-# of ~2 by this methodology. Meanwhile the RAW gate passes with margin
-# (r12 committed 1.72-1.79x of the r1 anchor band; r13 sits lower), so
-# the responsible call is the verdict-sanctioned alternative: retire the
-# CPU credit entirely. alpha=0 makes every normalized number MORE
-# conservative (a slow-CPU window now gets no credit; the penalty
-# direction was never cpu-dependent), cannot hide a regression, and
-# removes the one under-evidenced term from the model. Normalization is
-# now membw-linear only, still credit-clamped at CANARY2_CREDIT_FLOOR.
-# Fit provenance retained: alpha_ls=0.863, n=22, scripts/fit_alpha.py
-# over bisect_r10+r11+r12.jsonl, 2026-08-18.
+# CPU-canary sensitivity: retired in r13 (PERFORMANCE.md), still reported.
 ALPHA_CPU = 0.0
 
 # Bound on the total canary credit (r10 VERDICT "What's wrong" #2 and
@@ -73,20 +56,15 @@ MAINTENANCE_LIFECYCLE = {
 }
 
 
-def canary2_factor(cpu_sec: float | None, membw_gbps: float | None) -> float:
-    """Combined two-axis normalization factor (multiply a measured time by
-    this to express it at reference-host conditions), credit-clamped at
-    CANARY2_CREDIT_FLOOR. Either canary may be None/0 = axis unavailable."""
-    f = 1.0
-    if membw_gbps:
-        f *= membw_gbps / REF_MEMBW_GBPS
-    if cpu_sec:
-        f *= (REF_CPU_SEC / cpu_sec) ** ALPHA_CPU
+def canary2_factor(membw_gbps: float | None) -> float:
+    """Normalization factor (multiply a measured time by this to express
+    it at reference-host conditions): membw-linear, credit-clamped at
+    CANARY2_CREDIT_FLOOR. A None/0 canary means the axis is unavailable."""
+    f = membw_gbps / REF_MEMBW_GBPS if membw_gbps else 1.0
     return max(f, CANARY2_CREDIT_FLOOR)
 
 
-def to_ref_time(sec: float, cpu_sec: float | None,
-                membw_gbps: float | None) -> float:
+def to_ref_time(sec: float, membw_gbps: float | None) -> float:
     """Express a measured per-query time at reference-host conditions.
 
     The single shared per-query normalizer (ADVICE r11: bench.py and
@@ -96,8 +74,8 @@ def to_ref_time(sec: float, cpu_sec: float | None,
     canary2_factor, so the CANARY2_CREDIT_FLOOR clamp applies to every
     use of the model: credit is bounded at 0.75x, penalty never clamped.
     Applied to BOTH sides of the flag line (measurement with its window's
-    canaries, anchor with its introduction-round canaries)."""
-    return sec * canary2_factor(cpu_sec, membw_gbps)
+    canary, anchor with its introduction-round canary)."""
+    return sec * canary2_factor(membw_gbps)
 
 
 def perq_threshold(anchor_sec: float) -> float:

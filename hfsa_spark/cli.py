@@ -119,7 +119,11 @@ def main(argv: list[str] | None = None) -> int:
                 sort=SummarySort(args.sort),
             )
             sink = {"txt": summary_txt, "csv": summary_csv, "json": summary_json}[args.output]
-            out.write(sink(rep))
+            try:
+                text = sink(rep)
+            except FileNotFoundError:
+                raise SystemExit(f"summary: no such start dir {d!r}") from None
+            out.write(text)
     elif cmd in ("smallfiles", "sf"):
         from hfsa_spark.operators.smallfiles import small_files_report
         from hfsa_spark.sinks import small_files_csv, small_files_json, small_files_txt
@@ -131,9 +135,7 @@ def main(argv: list[str] | None = None) -> int:
                 hotspot_limit=args.uphl, user_hotspot_limit=args.uphl,
             )
             sink = {
-                "txt": lambda r: small_files_txt(r, hotspot_limit=args.uphl),
-                "csv": lambda r: small_files_csv(r, hotspot_limit=args.uphl),
-                "json": small_files_json,
+                "txt": small_files_txt, "csv": small_files_csv, "json": small_files_json,
             }[args.output]
             out.write(sink(rep))
     elif cmd in ("userusage", "uu"):

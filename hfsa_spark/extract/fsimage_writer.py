@@ -5,7 +5,7 @@ Parity target: the reference's test-image generator
 is an independent encoder built from the same public format knowledge:
 Hadoop's fsimage.proto / HDFS-5698). Used for (a) round-trip parity tests
 of the decoder and (b) synthesizing multi-million-inode images for the
-distributed-decode throughput probe (scripts/fsimage_decode_probe.py) —
+distributed-decode throughput probe (BASELINE.md, "distributed fsimage decode") —
 the reference generator exists for exactly that scale test
 (FsImageGenerator.java:47-53).
 

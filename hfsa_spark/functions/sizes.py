@@ -108,4 +108,4 @@ def storage_policy_name(storage_policy_id: Column | str) -> Column:
     mapping = F.create_map(
         *[F.lit(x) for kv in STORAGE_POLICIES.items() for x in kv]
     )
-    return F.coalesce(mapping.getItem(c), F.lit("HOT"))
+    return F.coalesce(mapping[c], F.lit("HOT"))

@@ -61,18 +61,13 @@ from hfsa_spark.operators.similarity import (
     ivf_assign_arrow,
     ivf_topk,
     ivf_topk_indexed,
-    ivfpq_index_arrow,
-    ivfpq_topk,
-    ivfpq_topk_arrow,
     kmeans_iterate,
-    l2_normalize,
     l2_normalize_df,
     pq_adc_rerank_topk,
     pq_adc_topk,
     pq_adc_topk_arrow,
     pq_codebooks_from_seeds,
     pq_encode,
-    pq_encode_arrow,
     pq_mse,
     pq_train,
     quantize_embeddings,
@@ -86,7 +81,6 @@ from hfsa_spark.operators.text import (
     next_token_stats,
     regex_redact,
     repetition_profile,
-    text_profile,
     tfidf_top_terms,
     vocab_top_terms,
 )
@@ -129,19 +123,14 @@ __all__ = [
     "ivf_assign_arrow",
     "ivf_topk",
     "ivf_topk_indexed",
-    "ivfpq_index_arrow",
-    "ivfpq_topk",
-    "ivfpq_topk_arrow",
     "kmeans_iterate",
     "pq_adc_rerank_topk",
     "pq_adc_topk",
     "pq_adc_topk_arrow",
     "pq_codebooks_from_seeds",
     "pq_encode",
-    "pq_encode_arrow",
     "pq_mse",
     "pq_train",
-    "l2_normalize",
     "l2_normalize_df",
     "quantize_embeddings",
     "write_ivf_index",
@@ -153,7 +142,6 @@ __all__ = [
     "token_budget_filter",
     "approx_distinct_report",
     "approx_quantile_report",
-    "text_profile",
     "chunk_documents",
     "next_token_stats",
     "repetition_profile",

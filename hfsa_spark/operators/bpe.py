@@ -18,19 +18,11 @@ keeps every step declarative:
   symbol array (greedy left-to-right, non-overlapping — the reference
   semantics), no Python UDF; ``localCheckpoint`` per iteration keeps the
   lineage flat so N merges cost N short jobs, not O(N²) recompute.
-* **encoding** — the learned merge table is a broadcast-sized ranks dict;
-  ``bpe_encode`` applies it with an Arrow-batched greedy lowest-rank
-  merger (the standard GPT-2-style encoder loop), caching segmentations
-  per distinct word within a batch.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hfsa_spark.operators.text import tokens
@@ -156,59 +148,3 @@ def bpe_train_trace(
         trace.append((left, right, cnt))
         vocab = _apply_merge(vocab, left, right).localCheckpoint(eager=False)
     return trace
-
-
-def bpe_segment(word: str, ranks: dict[tuple[str, str], int], eow: str = EOW) -> list[str]:
-    """Greedy lowest-rank BPE segmentation of one word (the standard
-    encoder loop): repeatedly merge the adjacent pair with the smallest
-    rank until none of the remaining pairs was learned."""
-    syms = list(word) + [eow]
-    while len(syms) > 1:
-        best, best_i = None, -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best is None or r < best):
-                best, best_i = r, i
-        if best is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return syms
-
-
-def bpe_encode(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str]],
-    eow: str = EOW,
-) -> DataFrame:
-    """(id, tokens array<string>, n_tokens) — tokenize with the learned
-    merges. The merge table rides along as a broadcast-sized closure
-    (|merges| entries); segmentation is Arrow-batched with a per-batch
-    cache keyed on the distinct words, so repeated words cost one dict
-    lookup."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[str]] = {}
-        for batch in batches:
-            if not len(batch):
-                continue
-            toks_out, counts = [], []
-            for text in batch[text_col]:
-                toks: list[str] = []
-                for w in (text or "").lower().split():
-                    seg = cache.get(w)
-                    if seg is None:
-                        seg = bpe_segment(w, ranks, eow)
-                        cache[w] = seg
-                    toks.extend(seg)
-                toks_out.append(toks)
-                counts.append(len(toks))
-            yield pd.DataFrame(
-                {id_col: batch[id_col], "tokens": toks_out, "n_tokens": counts}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} bigint, tokens array<string>, n_tokens int"
-    )

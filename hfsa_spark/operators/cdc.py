@@ -71,8 +71,8 @@ def _latest_per_key(
     ships the whole storm into ONE task's sort; the struct-max
     aggregate collapses each input partition to one candidate per key
     map-side — the shuffle carries ≤ (#map partitions) rows per key
-    and every sort is partition-local (probe:
-    scripts/cdc_scale_probe.py degenerate rows). No salt is needed
+    and every sort is partition-local (probe: PERFORMANCE.md "Round-8:
+    the degenerate-skew escape hatch"). No salt is needed
     precisely because of that partial phase. Same winner as the window
     whenever (ts, seq) is unique per key (the module's determinism
     contract); on violated contracts the struct max breaks orderable-
@@ -168,8 +168,8 @@ def upsert_merge(
     window would sort the whole storm in one task. See
     :func:`_latest_per_key`; the winner is identical whenever
     (ts, seq) is unique per key. Property-tested against the window
-    path in tests/test_properties_cdc.py; probe row in
-    scripts/cdc_scale_probe.py.
+    path in tests/test_properties_cdc.py; probe rows in PERFORMANCE.md
+    "Round-8: the degenerate-skew escape hatch".
 
     ``evolve_schema=True`` (opt-in) accepts ADDITIVE schema drift
     between snapshot and feed — the Delta/Iceberg ``mergeSchema``

@@ -452,89 +452,6 @@ def connected_components(
     )
 
 
-def connected_components_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "id",
-    max_iter: int = 30,
-) -> tuple[DataFrame, int]:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm): same (id, group_id) contract as
-    ``connected_components`` but O(log n) rounds instead of O(diameter) —
-    the upgrade path for adversarial near-dup CHAINS (contaminated
-    boilerplate threading thousands of docs), where min-label propagation
-    needs one shuffle round per hop.
-
-    Per round: large-star points every node's larger neighbors at its
-    neighborhood min (2 shuffles: groupBy + join), small-star re-points the
-    smaller neighbors; the fixed point is stars rooted at each component's
-    min id. Convergence is checked with a (count, hash-sum) signature — one
-    tiny aggregate, no driver-side edge collection. Returns
-    (labels, rounds_used).
-    """
-    fwd = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    sym = (
-        fwd.union(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    edges = sym
-    prev_sig = None
-    rounds = 0
-    star = None
-    for rounds in range(1, max_iter + 1):
-        # large-star: u's neighborhood min m = least(u, min neighbors);
-        # every neighbor v > u re-points to m (m < v always, so the
-        # output is high→low directed)
-        mins = edges.groupBy("u").agg(
-            F.least(F.col("u"), F.min("v")).alias("m")
-        )
-        ls = (
-            edges.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star on the directed (u → v<u) edges: all of u's smaller
-        # neighbors (and u itself) point at u's min
-        mins2 = ls.groupBy("u").agg(F.min("v").alias("m"))
-        star = (
-            ls.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # hash bounded to 2^40 so the ANSI-mode sum can't overflow long
-        # before ~2^23 edges per partition of the sum
-        sig = tuple(
-            star.agg(
-                F.count(F.lit(1)),
-                F.coalesce(
-                    F.sum(F.pmod(F.xxhash64("u", "v"), F.lit(1 << 40))), F.lit(0)
-                ),
-            ).collect()[0]
-        )
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-        edges = star.union(
-            star.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-
-    labels = nodes.select(F.col(id_col).alias("u")).join(star, "u", "left")
-    out = labels.select(
-        F.col("u").alias(id_col),
-        F.coalesce(F.col("v"), F.col("u")).alias("group_id"),
-    )
-    return out, rounds
-
-
 # -------------------------------------------------------------- jaccard --
 
 

@@ -145,39 +145,6 @@ def robust_zscore(
     )
 
 
-def quarantine_invalid(
-    df: DataFrame,
-    rules: dict[str, Column],
-) -> tuple[DataFrame, DataFrame]:
-    """Bad-record routing for ingestion: ``rules`` maps rule-name → a
-    boolean Column that must hold for a VALID row. Returns
-    ``(valid, quarantined)`` where quarantined rows carry
-    ``failed_rules`` (array of every rule they broke — all rules are
-    evaluated, not short-circuited, so the quarantine table is
-    actionable). The standard pattern: write ``quarantined`` to a side
-    table with the batch id, alert on its growth rate
-    (:func:`hfsa_spark.plans.observe_quality` on the same scan), and
-    keep the main pipeline deterministic instead of crashing on the
-    first malformed row.
-
-    Scale: one map-only pass — the rule array is a codegen'd expression;
-    both outputs share the scan (Spark plans them as two filters over
-    one cached/pushed-down source).
-    """
-    checks = F.array(
-        *[
-            F.when(~cond, F.lit(name)).otherwise(F.lit(None))
-            for name, cond in rules.items()
-        ]
-    )
-    tagged = df.withColumn(
-        "failed_rules", F.filter(checks, lambda x: x.isNotNull())
-    )
-    valid = tagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
-    bad = tagged.filter(F.size("failed_rules") > 0)
-    return valid, bad
-
-
 def pipeline_funnel(
     df: DataFrame, stages: list[tuple[str, Column | str]]
 ) -> DataFrame:

@@ -57,11 +57,6 @@ from pyspark.sql import functions as F
 
 from hfsa_spark.plans import parallelize_compute
 
-IMAGE_SCHEMA = (
-    "doc_id bigint, media_type string, payload binary,"
-    " width int, height int, n_channels int, format string"
-)
-
 IMAGE_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, aspect_ratio double,"
     " mean_luma double, phash bigint"
@@ -1017,78 +1012,9 @@ def sample_frames(
     )
 
 
-RESIZED_SCHEMA = "doc_id bigint, payload binary, width int, height int"
-
 AUDIO_FEATURES_SCHEMA = (
     "doc_id bigint, duration_s double, sample_rate int, rms double, clip_ratio double"
 )
-
-
-def resize_images(
-    media: DataFrame,
-    target_width: int = 224,
-    target_height: int = 224,
-    fake: bool = False,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """Batch image resize → (doc_id, payload, width, height).
-
-    Real path: uncompressed BMP, non-interlaced 8-bit PNG, non-interlaced
-    GIF, and baseline JPEG rasters are decoded (:func:`decode_raster`),
-    nearest-neighbor resampled with numpy (:func:`resize_nearest`), and
-    re-encoded as 24-bit BMP — fully dependency-free. Progressive JPEG
-    and interlaced/16-bit variants raise NotImplementedError. The fake
-    path re-digests the payload to a deterministic pseudo-resized blob
-    for synthetic corpora.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            if not fake:
-                payloads = []
-                for p in batch["payload"]:
-                    raw = bytes(p) if p is not None else b""
-                    arr = decode_raster(raw)
-                    if arr is None:
-                        hdr = parse_image_header(raw)
-                        fmt = hdr["format"] if hdr else "unrecognized"
-                        raise NotImplementedError(
-                            f"real resize covers uncompressed BMP and 8-bit"
-                            f" PNG only; {fmt} raster decode needs a codec"
-                            " library — pass fake=True for the plumbing"
-                            " decoder"
-                        )
-                    # normalize to BMP-encodable channels: drop alpha,
-                    # collapse gray+alpha to gray
-                    arr = arr[:, :, :3] if arr.shape[2] >= 3 else arr[:, :, :1]
-                    payloads.append(
-                        encode_bmp(resize_nearest(arr, target_width, target_height))
-                    )
-            else:
-                payloads = batch["payload"].map(
-                    lambda p: hashlib.sha256(
-                        (bytes(p) if p is not None else b"")
-                        + f"{target_width}x{target_height}".encode()
-                    ).digest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "payload": payloads,
-                    "width": target_width,
-                    "height": target_height,
-                }
-            )
-
-    return (
-        _maybe_parallel(
-            media.filter(F.col("media_type") == "image").select("doc_id", "payload"),
-            min_partitions,
-        )
-        .mapInPandas(run, schema=RESIZED_SCHEMA)
-    )
 
 
 def extract_audio_features(

@@ -1,10 +1,8 @@
-"""Distributed PCA over embedding columns — the covariance-accumulation
-pattern: the N×d corpus is NEVER shuffled or collected; each Arrow batch
-contributes a d×d partial Gram matrix + sum vector + count (map-only),
-the driver reduces the tiny per-batch moments and eigendecomposes d×d
-with numpy, and projection broadcasts the k×d component matrix back as a
-literal for a map-only transform. d is model-sized (64–4096), so the
-driver-side work is O(d²)–O(d³) regardless of corpus size — the same
+"""Embedding moments for PCA — the covariance-accumulation pattern: the
+N×d corpus is NEVER shuffled or collected; each Arrow batch contributes
+a d×d partial Gram matrix + sum vector + count (map-only), and the
+driver reduces the tiny per-batch moments. d is model-sized (64–4096),
+so the driver-side work is O(d²) regardless of corpus size — the same
 "collect the sketch, not the data" contract as the k-means / PQ-codebook
 operators in similarity.py.
 
@@ -13,8 +11,7 @@ Two moment paths, equivalence-tested:
   per-row µ-quantization (floor(x·10⁶+0.5) BEFORE the sum) so the sums
   are integer and associative — bit-identical in any engine or partition
   order, which is what gives q109 an exact DuckDB oracle.
-* ``covariance_arrow`` — the production float64 path (np X^T X per Arrow
-  batch), used by ``pca_fit``.
+* ``covariance_arrow`` — the float64 path (np X^T X per Arrow batch).
 """
 
 from __future__ import annotations
@@ -112,49 +109,3 @@ def covariance_arrow(df: DataFrame, col: str = "embedding", dim: int = 64):
     mean = s / n
     cov = g / n - np.outer(mean, mean)
     return mean, cov, n
-
-
-def pca_fit(df: DataFrame, col: str = "embedding", dim: int = 64, k: int = 8) -> dict:
-    """Fit PCA: covariance by :func:`covariance_arrow`, then a driver-side
-    d×d ``eigh``. Returns {mean, components (k×d, leading first),
-    explained_variance, n}."""
-    import numpy as np
-
-    mean, cov, n = covariance_arrow(df, col, dim)
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T
-    # sign convention: largest-|.| coordinate of each component positive
-    for c in comps:
-        if c[np.argmax(np.abs(c))] < 0:
-            c *= -1
-    return {
-        "mean": mean,
-        "components": comps,
-        "explained_variance": vals[order],
-        "n": n,
-    }
-
-
-def pca_project(
-    df: DataFrame, id_col: str, col: str, model: dict
-) -> DataFrame:
-    """(id, pc array<double>) — map-only projection (x − mean) @ Wᵀ with
-    the k×d component matrix shipped in the closure (model-sized
-    broadcast). Arrow-batched numpy matmul; zero shuffles."""
-    import numpy as np
-
-    mean = np.asarray(model["mean"])
-    comps = np.asarray(model["components"])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if not len(batch):
-                continue
-            x = np.array([np.asarray(v, dtype=np.float64) for v in batch[col]])
-            proj = (x - mean) @ comps.T
-            yield pd.DataFrame({id_col: batch[id_col], "pc": [p.tolist() for p in proj]})
-
-    return df.select(id_col, col).mapInPandas(
-        run, schema=f"{id_col} bigint, pc array<double>"
-    )

@@ -42,30 +42,6 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2_normalize(a: Column | str) -> Column:
-    """Unit-normalize a vector (each element / L2 norm, as double); an
-    all-zero vector stays all-zero instead of going NaN. Normalizing at
-    ingest turns every downstream cosine into a plain dot product — at
-    100 TB that halves the flop count of brute-force scoring and lets
-    IVF/LSH work on dot products directly.
-
-    NOTE: as a single Column expression the norm fold sits inside the
-    transform lambda and higher-order functions are interpreted — the
-    fold re-runs per ELEMENT, O(dim²) per row. Fine for one-off use;
-    for bulk normalization use ``l2_normalize_df``, which materializes
-    the norm once per row in a separate projection."""
-    ca = F.col(a) if isinstance(a, str) else a
-    norm = l2_norm(ca)
-    return F.transform(
-        ca,
-        lambda x: F.when(norm == 0.0, F.lit(0.0)).otherwise(x.cast("double") / norm),
-    )
-
-
 def l2_normalize_df(
     df: DataFrame, vec_col: str = "embedding", out_col: str = "unit"
 ) -> DataFrame:
@@ -354,54 +330,6 @@ def pq_encode_long(
     )
 
 
-def pq_encode_arrow(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The cluster-scale PQ encode path: Arrow-batched ``mapInPandas``
-    with numpy codebook matrices — for real codebooks (M×256 codewords)
-    where the literal-expression form would bloat the plan and interpret
-    every fold. One ||x−c||² matmul per (batch, subvector), codes via
-    argmin. Same tie-break (smallest codeword id — numpy argmin returns
-    the first minimum); distances accumulate in a different order than
-    the expression path, so codes can differ only on exact float ties,
-    which real embeddings don't produce (agreement is tested).
-    Returns (id, codes array<int>).
-    """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    d0 = books[0].shape[1]
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            if not len(batch):
-                continue
-            vecs = np.asarray(batch[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(vecs), m), dtype=np.int32)
-            for mm in range(m):
-                sub = vecs[:, mm * d0 : (mm + 1) * d0]
-                cb = books[mm]
-                d2 = (
-                    (sub * sub).sum(axis=1, keepdims=True)
-                    - 2.0 * (sub @ cb.T)
-                    + (cb * cb).sum(axis=1)
-                )
-                codes[:, mm] = np.argmin(d2, axis=1)
-            yield pd.DataFrame({"id": batch[id_col], "codes": list(codes)})
-
-    return (
-        parallelize_compute(df.select(id_col, vec_col))
-        .mapInPandas(run, schema="id bigint, codes array<int>")
-        .withColumnRenamed("id", id_col)
-    )
-
-
 def pq_adc_topk(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -451,96 +379,6 @@ def pq_adc_topk(
     )
 
 
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    n_probe: int = 2,
-    centroid_stride: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ: the composition that runs billion-scale ANN in practice —
-    a coarse IVF quantizer prunes to ``n_probe`` inverted lists, and
-    within the probed lists distance is approximated by PQ ADC lookups
-    instead of full-vector math.
-
-    Built from the existing pieces: IVF assignment (map-only, literal
-    centroids), PQ encode (map-only, literal codebooks) — both computed in
-    the same scan of the corpus — then the candidate join touches only
-    probed lists and scores with M table lookups per row. At scale the
-    (list_id, codes) table is the stored index: dim×4 bytes/vector
-    shrinks to ~M bytes, the difference between an I/O-bound and an
-    in-memory probe at 100 TB.
-    """
-    centroids = corpus.filter((F.col(id_col) % centroid_stride) == 0)
-    cent_rows = _collect_centroids(centroids, id_col, vec_col)
-    scorer = _make_scorer(cent_rows)
-    n_probe = min(n_probe, len(cent_rows))  # slice(-n,n) past length yields []
-
-    m = len(codebooks)
-    d0 = len(codebooks[0][0])
-    # one scan: list assignment + PQ codes together
-    code_exprs = []
-    for mm in range(m):
-        structs = ", ".join(
-            f"struct({_pq_d2_sql(vec_col, cw, mm * d0 + 1, d0)} as d2, {kk} as k)"
-            for kk, cw in enumerate(codebooks[mm])
-        )
-        code_exprs.append(f"array_min(array({structs})).k")
-    indexed = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        l2_norm(vec_col).alias("__cnorm"),
-        F.expr("array(" + ", ".join(code_exprs) + ")").alias("codes"),
-    ).withColumn(
-        "list_id",
-        -F.array_max(scorer(F.col("__cvec"), F.col("__cnorm")))["neg_id"],
-    ).drop("__cvec", "__cnorm")
-
-    lut_rows = ", ".join(
-        "array("
-        + ", ".join(_pq_d2_sql(vec_col, cw, mm * d0 + 1, d0) for cw in codebooks[mm])
-        + ")"
-        for mm in range(m)
-    )
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(vec_col).alias("__qnorm"),
-        F.expr(f"array({lut_rows})").alias("__lut"),
-    ).withColumn(
-        "list_id",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(scorer(F.col("__qvec"), F.col("__qnorm"))),
-                    -n_probe,
-                    n_probe,
-                ),
-                lambda s: -s["neg_id"],
-            )
-        ),
-    ).drop("__qvec", "__qnorm")
-
-    dist = F.expr(
-        "aggregate(zip_with(codes, __lut, (c, row) -> element_at(row, c + 1)),"
-        " cast(0.0 as double), (a, v) -> a + v)"
-    )
-    scored = (
-        indexed.join(F.broadcast(probes), "list_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", dist.alias("dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
-
-
 def pq_adc_topk_arrow(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -556,7 +394,7 @@ def pq_adc_topk_arrow(
     BATCH-LOCAL top-k, so the final global top-k sees (num_batches × k)
     rows per query instead of the full corpus. 1M vectors: 30.6 s
     interpreted-expression path → ~1 s this path (measured,
-    scripts/ann_scale_probe.py)."""
+    PERFORMANCE.md "ANN scale probe")."""
     import numpy as np
     import pandas as pd
     from collections.abc import Iterator
@@ -629,7 +467,7 @@ def pq_adc_rerank_topk(
     vectors of the shortlist are fetched and re-ranked exactly. Raw ADC
     ranking saturates when near neighbors share codes (tied distances —
     measured recall@10 ≈ k/cluster_size on clustered corpora,
-    scripts/ann_scale_probe.py); the re-rank restores it at the cost of
+    PERFORMANCE.md "ANN recall@10"); the re-rank restores it at the cost of
     ``depth`` exact distances per query.
 
     Scale shape: the candidate id set (queries × depth) is broadcast and
@@ -648,153 +486,6 @@ def pq_adc_rerank_topk(
     shortlist = corpus.join(F.broadcast(cand), id_col, "left_semi")
     return exact_topk_arrow(
         shortlist, queries, k=k, metric=metric, id_col=id_col, vec_col=vec_col
-    )
-
-
-def ivfpq_index_arrow(
-    corpus: DataFrame,
-    centroid_matrix,
-    centroid_ids,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Build the production IVF-PQ index in ONE corpus scan → (id,
-    list_id, codes): Arrow/BLAS coarse assignment (matmul argmax, min-cid
-    ties) and PQ encode (matmul argmin per subvector, min-code ties) share
-    each batch — the 100 TB side is read once and never shuffled. Persist
-    the output ``partitionBy("list_id")`` so probes prune partitions; the
-    index is ~M bytes/vector instead of dim×4."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    cmat = np.asarray(centroid_matrix, dtype=np.float64)
-    cids = np.asarray(centroid_ids, dtype=np.int64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    d0 = books[0].shape[1]
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            if not len(batch):
-                continue
-            x = np.asarray(batch[vec_col].tolist(), dtype=np.float64)
-            xn = np.linalg.norm(x, axis=1)
-            cos = (x @ cmat.T) / np.outer(xn, cnorm)
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for mm in range(m):
-                s = x[:, mm * d0 : (mm + 1) * d0]
-                codes[:, mm] = (
-                    (books[mm] ** 2).sum(axis=1) - 2.0 * (s @ books[mm].T)
-                ).argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "id": batch[id_col],
-                    "list_id": cids[np.argmax(cos, axis=1)],
-                    "codes": list(codes),
-                }
-            )
-
-    return parallelize_compute(corpus.select(id_col, vec_col)).mapInPandas(
-        run, schema="id bigint, list_id bigint, codes array<bigint>"
-    )
-
-
-def ivfpq_topk_arrow(
-    index_df: DataFrame,
-    queries: DataFrame,
-    codebooks: list[list[list[float]]],
-    centroid_matrix,
-    centroid_ids,
-    k: int = 10,
-    n_probe: int = 8,
-    corpus: DataFrame | None = None,
-    rerank_depth: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe an :func:`ivfpq_index_arrow` table the production way: each
-    query's ``n_probe`` nearest lists are picked driver-side (queries are
-    few, centroids small), the index is filtered with an ``isin`` literal
-    (partition-prunable when stored partitioned by list_id), and each
-    Arrow batch ADC-scores only the rows in that query's probed lists,
-    emitting its batch-local top-k with the global (dist, id) tie-break.
-    ``rerank_depth > 0`` re-ranks the ADC shortlist exactly against the
-    true vectors (pass ``corpus``) — the full billion-scale pipeline:
-    prune → compressed scoring → exact re-rank. Returns (query_id,
-    neighbor_id, dist|score, rank)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    if rerank_depth and corpus is None:
-        raise ValueError("rerank_depth > 0 needs the corpus for exact re-rank")
-    cmat = np.asarray(centroid_matrix, dtype=np.float64)
-    cids = np.asarray(centroid_ids, dtype=np.int64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    d0 = books[0].shape[1]
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids, luts, probes = [], [], {}
-    for r in q_rows:
-        qid = int(r[id_col])
-        qv = np.asarray(r[vec_col], dtype=np.float64)
-        cos = (qv @ cmat.T) / (np.linalg.norm(qv) * cnorm)
-        order = np.lexsort((cids, -cos))[:n_probe]  # ties → smaller cid
-        probes[qid] = cids[order]
-        q_ids.append(qid)
-        luts.append(
-            np.stack(
-                [
-                    ((qv[mm * d0 : (mm + 1) * d0] - books[mm]) ** 2).sum(axis=1)
-                    for mm in range(m)
-                ]
-            )
-        )
-    union_lists = sorted({int(v) for lists in probes.values() for v in lists})
-    cut = max(k, rerank_depth)
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        rows_m = np.arange(m)
-        for batch in batches:
-            if not len(batch):
-                continue
-            codes = np.asarray(batch["codes"].tolist(), dtype=np.int64)
-            ids = batch["id"].to_numpy()
-            lists = batch["list_id"].to_numpy()
-            for qid, lut in zip(q_ids, luts):
-                mask = np.isin(lists, probes[qid]) & (ids != qid)
-                if not mask.any():
-                    continue
-                d = lut[rows_m, codes[mask]].sum(axis=1)
-                i = ids[mask]
-                if len(d) > cut:
-                    order = np.lexsort((i, d))[:cut]
-                    d, i = d[order], i[order]
-                yield pd.DataFrame({"query_id": qid, "neighbor_id": i, "dist": d})
-
-    scored = (
-        index_df.filter(F.col("list_id").isin(union_lists))
-        .select("id", "list_id", "codes")
-        .mapInPandas(run, schema="query_id bigint, neighbor_id bigint, dist double")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cut)
-    )
-    if not rerank_depth:
-        return ranked.filter(F.col("rank") <= k).orderBy("query_id", "rank")
-    cand = ranked.select(F.col("neighbor_id").alias(id_col)).distinct()
-    shortlist = corpus.join(F.broadcast(cand), id_col, "left_semi")
-    return exact_topk_arrow(
-        shortlist, queries, k=k, metric="l2", id_col=id_col, vec_col=vec_col
     )
 
 
@@ -888,8 +579,8 @@ def synthesize_clustered_embeddings(
     executor-side (no driver materialization): vector i = center(i mod
     n_clusters) + noise·jitter(i), every component an integer-hash map to
     [-1, 1). The cluster structure makes it a meaningful recall benchmark
-    (uniform random vectors have no neighbors to find); used by the ANN
-    recall probe (scripts/ann_scale_probe.py) and the recall-floor pytest."""
+    (uniform random vectors have no neighbors to find); used by the
+    recall-floor pytest (PERFORMANCE.md "ANN recall@10" has the curve)."""
     vec_expr = (
         f"transform(sequence(1, {dim}), j ->"
         f" cast(pmod(hash((id % {n_clusters}) * {dim} + j + 1000003), 10007) as double)"

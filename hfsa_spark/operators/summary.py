@@ -83,7 +83,10 @@ class SummaryReport:
 
         ``overall`` carries ``num_groups``/``num_users``: the non-null names
         among ALL grouping rows (``count(distinct)`` ignores nulls), so the
-        user filter does not change ``num_users``."""
+        user filter does not change ``num_users``.
+
+        A start dir's own row is always in scope, so an empty scope means
+        the dir does not exist: that raises ``FileNotFoundError(dir)``."""
         rows = self.rows.collect()
 
         def part(gid: int, name: str) -> list[Row]:
@@ -91,7 +94,9 @@ class SummaryReport:
             return sorted(got, key=lambda r: (r[self.sort.column], *asc_key(r[name])))
 
         groups, all_users = part(2, "group"), part(1, "user")
-        top = part(3, "user")[0]  # IndexError on an empty scope, like overall.collect()[0]
+        top = next((r for r in rows if r["__gid"] == 3), None)
+        if top is None:
+            raise FileNotFoundError(self.dir)
         overall = {
             "num_groups": sum(r["group"] is not None for r in groups),
             "num_users": sum(r["user"] is not None for r in all_users),

@@ -327,24 +327,6 @@ def regex_redact(
     return out.withColumn(f"{text_col}_redacted", redacted)
 
 
-def text_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One row per document with the full feature set."""
-    from hfsa_spark.plans import parallelize_compute
-
-    df = parallelize_compute(df.select(id_col, text_col))
-    return df.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_pieces"),
-        F.length(text_col).alias("n_chars_actual"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col).alias("stopword_ratio_en"),
-        quality_score(text_col).alias("quality"),
-        lang_id_heuristic(text_col).alias("lang_guess"),
-        fingerprint(text_col).alias("fingerprint"),
-    )
-
-
 def next_token_stats(
     df: DataFrame,
     text_col: str = "text",

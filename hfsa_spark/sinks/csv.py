@@ -73,12 +73,13 @@ def summary_csv(report: SummaryReport) -> str:
     return buf.getvalue()
 
 
-def small_files_csv(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
+def small_files_csv(report: SmallFilesReport) -> str:
     """Type,Name,Path,Small Files — Overall / per-user / per-user raw-count
-    hotspots (no rollup; see module docstring)."""
+    hotspots, top ``report.user_hotspot_limit`` per user (no rollup; see
+    module docstring)."""
     buf, w = _writer()
     w.writerow(["Type", "Name", "Path", "Small Files"])
-    res = report.collect_raw_top(hotspot_limit)
+    res = report.collect_raw_top(report.user_hotspot_limit)
     w.writerow(["Overall", "/", "", res.total])
     for user, count in res.users:
         w.writerow(["User", user, "", count])

@@ -67,8 +67,7 @@ def write_index_segment(
 
     Serving reads the UNION of segments (parquet partition discovery on
     ``seg=``): df / N / avgdl stay exact as long as each document lands in
-    exactly one segment — upstream streaming dedup's guarantee. Compact
-    old segments periodically the same way corpus batches are.
+    exactly one segment — upstream streaming dedup's guarantee.
     """
     _write_index_relations(
         df, index_dir, f"/seg={segment}", id_col, text_col, n_shards,
@@ -113,39 +112,6 @@ def _write_index_relations(
         index_dir + "/stats" + suffix
     )
     tf.unpersist()
-
-
-def compact_index(spark: SparkSession, src_dir: str, dst_dir: str, n_shards: int = 8) -> None:
-    """Merge a segmented index (many small ``seg=`` directories from
-    streaming maintenance) into one flat index at ``dst_dir`` — the
-    Lucene-merge step that keeps serving scans from degrading as segment
-    count grows. Postings re-shard/re-sort by term (restoring row-group
-    pruning across the whole corpus); doclen concatenates; stats collapse
-    to one exact-summed row. Write-to-new-dir keeps the operation
-    atomic-by-rename for the caller and the source index serveable
-    throughout.
-
-    Assumes the maintenance invariant (each document in exactly ONE
-    segment — guaranteed upstream by streaming dedup): stats sum across
-    segments and tf re-aggregates per (id, term), so a VIOLATED invariant
-    surfaces as inflated counts rather than being silently repaired — run
-    the dedup upstream, same precondition the serving path documents.
-    """
-    postings = spark.read.parquet(src_dir + "/postings").select("id", "term", "tf")
-    tf = postings.groupBy("id", "term").agg(F.sum("tf").alias("tf"))
-    (
-        tf.repartition(n_shards, "term")
-        .sortWithinPartitions("term", "id")
-        .write.mode("overwrite")
-        .parquet(dst_dir + "/postings")
-    )
-    dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
-    dl.write.mode("overwrite").parquet(dst_dir + "/doclen")
-    stats = spark.read.parquet(src_dir + "/stats").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("total_tokens").alias("total_tokens"),
-    )
-    stats.write.mode("overwrite").parquet(dst_dir + "/stats")
 
 
 def bm25_topk_indexed(

@@ -1,11 +1,9 @@
 """Write-layout operators: multi-dimensional (z-order) clustering for
-data skipping, and target-size compaction for small-file control.
+data skipping, and bucketed tables for exchange-free joins.
 
-Beyond-reference surface with a direct thematic tie: the reference's
-flagship report EXPOSES the small-files problem on HDFS
-(SmallFilesReportCommand — SURVEY.md §2.6 A3); these sinks are the write
-side that PREVENTS it, plus the clustering layout that makes parquet
-min/max pruning effective for multi-column predicates.
+Beyond-reference surface: the clustering layout makes parquet min/max
+pruning effective for multi-column predicates, and the bucketed layout
+pays a repeated join's shuffle once, at write time.
 
 Scale notes:
 * z-order: a sort on one interleaved integer — one range-shuffle, same
@@ -13,16 +11,9 @@ Scale notes:
   min/max envelope is tight on BOTH columns, so a scan filtered on either
   column (or both) prunes most files from the footer stats alone. A plain
   sort on col_a gives perfect pruning on col_a and none on col_b.
-* compaction: ceil(rows/target) output files via repartition +
-  maxRecordsPerFile — the knob pipeline writers use to keep file counts
-  in the "big enough for a scan task, small enough to parallelize" band
-  (the same band the reference's small-files report audits after the
-  fact).
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -75,33 +66,6 @@ def write_zordered(
         else with_z.repartitionByRange("__z")
     )
     parts.sortWithinPartitions("__z").drop("__z").write.mode("overwrite").parquet(path)
-
-
-def write_compacted(
-    df: DataFrame,
-    path: str,
-    target_rows_per_file: int,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Compact ``df`` into ceil(rows / target_rows_per_file) parquet files
-    of ≈ equal size; returns the file count. With ``sort_cols``, files are
-    additionally range-clustered on those columns (single-column data
-    skipping). The row count costs one pass; at scale, reuse a known
-    count or a metadata estimate instead.
-    """
-    n_rows = df.count()
-    n_files = max(1, math.ceil(n_rows / target_rows_per_file))
-    out = (
-        df.repartitionByRange(n_files, *sort_cols)
-        if sort_cols
-        else df.repartition(n_files)
-    )
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", target_rows_per_file)
-        .parquet(path)
-    )
-    return n_files
 
 
 def write_bucketed(

@@ -144,7 +144,7 @@ def summary_txt(report: SummaryReport) -> str:
     def stat_rows(rows, name_col: str) -> None:
         for r in rows:
             out.append(
-                f"{r[name_col]:>22s} |   {r['sum_directories']:10d} | {r['sum_symlinks']:9d} "
+                f"{r[name_col] or '':>22s} |   {r['sum_directories']:10d} | {r['sum_symlinks']:9d} "
                 f"| {r['sum_files']:10d} | {r['sum_file_size'] // (1024 * 1024):9d} "
                 f"| {r['sum_consumed_size'] // (1024 * 1024):9d} | {r['sum_blocks']:9d} "
                 f"| {_bucket_values(list(r['size_buckets']), widths)}"
@@ -168,9 +168,10 @@ def summary_txt(report: SummaryReport) -> str:
 # ---------------------------------------------------- smallfiles txt --
 
 
-def small_files_txt(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
+def small_files_txt(report: SmallFilesReport) -> str:
     """Small files report txt (handleReport + printOverallReport +
-    printUsersReport, SmallFilesReportCommand.java:161-276)."""
+    printUsersReport, SmallFilesReportCommand.java:161-276). The top-N
+    headers print the limits the report was cut with."""
     res = report.collect_hotspots()
     overall = res.total
 
@@ -189,7 +190,7 @@ def small_files_txt(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
 
     label_count = "#Small files "
     max_w_sum = max(number_of_digits(overall), len(label_count))
-    header = f"{label_count} | Path (top {hotspot_limit}) "
+    header = f"{label_count} | Path (top {report.hotspot_limit}) "
     out.append(header)
     out.append("-" * len(header))
     for path, count in res.hotspots:
@@ -200,26 +201,26 @@ def small_files_txt(report: SmallFilesReport, hotspot_limit: int = 10) -> str:
         out.append(f"No users found in directory paths [{report.dir}]")
         return "\n".join(out) + "\n"
 
-    # Username | #Small files | %
-    max_w_user = max(max(len(u) for u, _ in res.users), len("Username"))
+    # Username | #Small files | %; a null user prints as ""
+    max_w_user = max(max(len(u or "") for u, _ in res.users), len("Username"))
     top_count = res.users[0][1]
     max_w_cnt = max(number_of_digits(top_count), len("#Small files"))
     out.append(f"{_pad_trunc('Username', max_w_user)} | {_pad_trunc('#Small files', max_w_cnt)} | %")
     out.append("-" * (max_w_user + 3 + max_w_cnt + 3 + 10))
     for user, count in res.users:
         pct = float(count) / overall * 100.0
-        out.append(f"{user:<{max_w_user}s} | {count:{max_w_cnt}d} | {_fmt_pct(pct)}")
+        out.append(f"{user or '':<{max_w_user}s} | {count:{max_w_cnt}d} | {_fmt_pct(pct)}")
     out.append("")
 
     # Per-user hotspot details (top 10 users hardcoded, :235-247)
-    hotspot_label = f"Small files hotspots (top {hotspot_limit} count/path)"
+    hotspot_label = f"Small files hotspots (top {report.user_hotspot_limit} count/path)"
     out.append(f"{_pad_trunc('Username', max_w_user)} | {hotspot_label}")
     sep_len = max_w_user + 3 + len(hotspot_label)
     out.append("-" * sep_len)
 
-    for user, _ in res.users[: min(TOP_USERS_WITH_DETAIL, hotspot_limit)]:
+    for user, _ in res.users[:TOP_USERS_WITH_DETAIL]:
         for i, (path, count) in enumerate(res.paths.get(user, [])):
-            name = user if i == 0 else ""
+            name = (user or "") if i == 0 else ""
             out.append(f"{_pad_trunc(name, max_w_user)} | {count:{max_w_cnt}d} | {path}")
         out.append("-" * sep_len)
 

@@ -15,7 +15,6 @@ space is a ``tempfile.TemporaryDirectory``, and the result is materialized
 """
 
 from hfsa_spark.streaming.snapshots import (
-    read_snapshot_stream,
     snapshot_growth_report,
     snapshot_delta_report,
     snapshot_inode_diff,
@@ -58,7 +57,6 @@ from hfsa_spark.streaming.vectors import (
 )
 
 __all__ = [
-    "read_snapshot_stream",
     "snapshot_growth_report",
     "snapshot_delta_report",
     "snapshot_inode_diff",

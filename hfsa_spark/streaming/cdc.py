@@ -49,7 +49,7 @@ Two COW granularities, same protocol, same merge:
   O(touched buckets × bucket size), not O(snapshot); the manifest is
   n_buckets entries of driver-side JSON. This is the 100 TB path —
   rewrite volume scales with the CHANGE RATE, not the corpus
-  (probe: scripts/cdc_cow_probe.py).
+  (probe: PERFORMANCE.md "Round-7 CDC copy-on-write granularity probe").
 
 The snapshot/table dirs may live on any Hadoop-supported filesystem:
 all driver-side metadata IO (version listings, manifests, commit
@@ -222,9 +222,9 @@ def _bucket_expr(key_cols: list[str], n_buckets: int,
     touches few range buckets where a hash batch of the same size
     touches min(keys, n_buckets). This is why Delta/Iceberg MERGE wins
     in practice: their files are ingestion-time-clustered, the same
-    locality a pk-range bucket captures (probe: scripts/cdc_cow_probe.py
-    shows uniform-batch hash ≈ full rewrite vs clustered-batch range ≈
-    touched-fraction rewrite).
+    locality a pk-range bucket captures (PERFORMANCE.md "Round-7 CDC
+    copy-on-write granularity probe": uniform-batch hash ≈ full rewrite
+    vs clustered-batch range ≈ touched-fraction rewrite).
     """
     if bucket_mode == "hash":
         return F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]),
@@ -518,7 +518,8 @@ def apply_change_batch_bucketed(
 
     Write volume per batch is O(touched buckets × bucket size) — at
     100 TB with a 1%-of-keys change batch and 2^12 buckets, ~1% of the
-    corpus rewrites instead of 100% (probe: scripts/cdc_cow_probe.py).
+    corpus rewrites instead of 100% (probe: PERFORMANCE.md "Round-7 CDC
+    copy-on-write granularity probe").
 
     ``evolve_schema`` (r9) brings :func:`upsert_merge`'s ADDITIVE
     mergeSchema semantics to the bucketed path. Versioning makes it

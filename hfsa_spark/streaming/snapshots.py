@@ -16,17 +16,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def read_snapshot_stream(spark: SparkSession, root: str, schema: str) -> DataFrame:
-    """File-source stream over a growing directory of snapshot extracts.
-    ``maxFilesPerTrigger`` keeps each micro-batch bounded regardless of how
-    many snapshots arrive while the job was down."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(root)
-    )
-
-
 def snapshot_growth_report(snapshots: DataFrame) -> DataFrame:
     """Per (snapshot_ts, user): file count + bytes — the incremental twin of
     the summary report. Works identically on a batch DataFrame (partitioned

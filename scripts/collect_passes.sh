@@ -1,15 +1,12 @@
 #!/bin/bash
-# Opportunistic clean-window bench collector (VERDICT r10 item 1) +
-# alpha_cpu evidence collector (VERDICT r10 item 2).
+# Opportunistic clean-window bench collector (VERDICT r10 item 1).
 #
 # Loop: probe instantaneous steal for 20 s; when it reads below the
 # protocol's 0.5% recording rule (BASELINE.md:133), run one full
 # `python bench.py` pass (snapshotting BENCH_RUN.json to
-# $OUTDIR/pass_NN.json) and then one pinned-r8-tree 22-query pass
-# (scripts/ab_canary_pass.sh appends to scripts/data/bisect_r11.jsonl)
-# — each clean window yields both a min-merge pool member and one
-# (cpu-canary, time) evidence point for the alpha_cpu fit. Each pass's
-# own recorded steal_pct decides whether it qualifies at merge time.
+# $OUTDIR/pass_NN.json) — each clean window yields one min-merge pool
+# member. Each pass's own recorded steal_pct decides whether it
+# qualifies at merge time.
 #
 # Touch $OUTDIR/STOP to stop the loop after the current pass (avoids
 # pkill, which matches the caller's own compound command).
@@ -60,9 +57,6 @@ while [ "$n" -lt "$MAX" ]; do
             sleep 120
             continue
         fi
-        # alpha_cpu evidence point in (approximately) the same window
-        bash scripts/ab_canary_pass.sh "${AB_OUT:-/root/repo/scripts/data/bisect_r11.jsonl}" "${AB_ROUND:-11}" >> "$OUTDIR/ab.log" 2>&1
-        echo "[$(date +%H:%M:%S)] ab pass appended (see $OUTDIR/ab.log)"
     else
         echo "[$ts] steal=$s% >= 0.5% -> waiting 120s"
         sleep 120

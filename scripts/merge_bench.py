@@ -72,8 +72,8 @@ def main() -> None:
         if k not in anchors:
             continue
         a = anchors[k]
-        now_n = to_ref_time(v, cpu, membw)
-        anch_n = to_ref_time(a["sec"], a.get("cpu_sec"), a.get("membw_gbps"))
+        now_n = to_ref_time(v, membw)
+        anch_n = to_ref_time(a["sec"], a.get("membw_gbps"))
         if now_n > perq_threshold(anch_n):
             regressions[k] = {
                 "sec": round(v, 3), "sec_normalized": round(now_n, 3),
@@ -104,7 +104,7 @@ def main() -> None:
         "canary2_credit_floor": bench_constants.CANARY2_CREDIT_FLOOR,
         "batch_mean_canary_normalized": round(bm * (membw / REF_MEMBW_GBPS), 4),
         "batch_mean_canary2_normalized": round(
-            bm * canary2_factor(cpu, membw), 4
+            bm * canary2_factor(membw), 4
         ),
         "perq_regressions": regressions,
         "perq_regressions_raw": regressions_raw,

@@ -2,10 +2,9 @@
 brute-force baseline on a seeded clustered 100k corpus — the number the
 similarity stack is ultimately judged by (the exactness/equivalence tests
 elsewhere pin determinism, not approximation quality). The full
-recall-vs-cost curve lives in scripts/ann_scale_probe.py recall mode /
-PERFORMANCE.md; these tests pin floors so a regression in bucketing,
-probing, or tie-handling shows up as a failure, not a silent quality
-drop."""
+recall-vs-cost curve lives in PERFORMANCE.md "ANN recall@10"; these
+tests pin floors so a regression in bucketing, probing, or tie-handling
+shows up as a failure, not a silent quality drop."""
 
 from __future__ import annotations
 
@@ -58,7 +57,7 @@ def test_adc_rerank_recovers_recall_20k(spark):
         pq_adc_rerank_topk,
         pq_adc_topk_arrow,
         pq_codebooks_from_seeds,
-        pq_encode_arrow,
+        pq_encode,
         synthesize_clustered_embeddings,
     )
 
@@ -71,7 +70,8 @@ def test_adc_rerank_recovers_recall_20k(spark):
         gt.setdefault(r["query_id"], set()).add(r["neighbor_id"])
 
     books = pq_codebooks_from_seeds(corpus, m=8, num_codes=256)
-    codes = pq_encode_arrow(corpus, books)
+    # encoded once: the raw ADC ranking and the re-rank both read the codes
+    codes = pq_encode(corpus, books).localCheckpoint(eager=True)
     raw = _recall(pq_adc_topk_arrow(codes, queries, books, k=10).collect(), gt)
     rer = _recall(
         pq_adc_rerank_topk(corpus, codes, queries, books, k=10, depth=200).collect(),

@@ -1,15 +1,13 @@
-"""Distributed BPE trainer/encoder: exact match against an independent
+"""Distributed BPE trainer: exact match against an independent
 pure-Python reference (Sennrich et al. 2016 semantics), tie-breaks,
-early stop, fully-merged words, and the greedy rank-based encoder."""
+early stop and fully-merged words."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 from hfsa_spark.operators.bpe import (
-    bpe_encode,
     bpe_pair_counts,
-    bpe_segment,
     bpe_train,
     word_vocab,
 )
@@ -81,28 +79,6 @@ def test_fully_merged_words_do_not_break_pair_counts(spark):
     assert any(len(r["syms"]) == 1 for r in rows)  # collapsed to 'aa</w>'
     # pair counts over the collapsed vocab must be empty, not crash
     assert bpe_pair_counts(vocab).count() == 0
-
-
-def test_encoder_applies_merges_greedily(spark):
-    texts = ["low lower lowest low low"]
-    merges, _ = bpe_train(_df(spark, texts), "text", num_merges=10)
-    enc = {
-        r.doc_id: r for r in bpe_encode(_df(spark, texts), "doc_id", "text", merges).collect()
-    }
-    ranks = {p: i for i, p in enumerate(merges)}
-    expected = []
-    for w in texts[0].split():
-        expected.extend(bpe_segment(w, ranks))
-    assert list(enc[0].tokens) == expected
-    assert enc[0].n_tokens == len(expected)
-    # "low</w>" is frequent enough to become one token
-    assert "low</w>" in enc[0].tokens
-
-
-def test_encoder_unknown_chars_stay_atomic(spark):
-    merges, _ = bpe_train(_df(spark, ["aa aa"]), "text", num_merges=5)
-    enc = bpe_encode(_df(spark, ["zq"]), "doc_id", "text", merges).collect()
-    assert list(enc[0].tokens) == ["z", "q", "</w>"]
 
 
 def test_word_vocab_counts(spark):

@@ -67,3 +67,18 @@ def test_inode_lookup_by_path():
 def test_unknown_fixture_exits():
     with pytest.raises(SystemExit):
         run_cli("fixture:nope", "summary")
+
+
+def test_summary_of_missing_dir_exits():
+    with pytest.raises(SystemExit, match="/nope"):
+        run_cli("fixture:fsi_small", "summary", "-p", "/nope")
+
+
+def test_smallfiles_uphl_details_every_owner():
+    """--uphl cuts the paths per user, not the users: hfsa details the top
+    10 users whatever the limit (SmallFilesReportCommand.java:235-247)."""
+    out = run_cli("fixture:fsi_small", "sf", "--uphl", "1")
+    assert "| Path (top 1) " in out
+    detail = out.split("Small files hotspots (top 1 count/path)\n")[1].splitlines()[1:]
+    owners = [ln.split(" | ")[0].strip() for ln in detail if not ln.startswith("---")]
+    assert owners == ["mm", "root"]

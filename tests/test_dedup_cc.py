@@ -71,52 +71,6 @@ def test_simhash_neardup_rejects_insufficient_bands(spark):
         simhash_neardup_pairs(df, "doc_id", "text", max_hamming=3, bands=3)
 
 
-def test_star_matches_label_prop_random_graph(spark):
-    import random
-
-    from hfsa_spark.operators.dedup import connected_components_star
-
-    rng = random.Random(7)
-    nodes = spark.createDataFrame([(i,) for i in range(200)], ["id"])
-    pairs = spark.createDataFrame(
-        [
-            (a, b)
-            for a, b in {
-                tuple(sorted(rng.sample(range(200), 2))) for _ in range(150)
-            }
-        ],
-        ["id_a", "id_b"],
-    )
-    ref = {r["id"]: r["group_id"] for r in connected_components(nodes, pairs).collect()}
-    star_df, rounds = connected_components_star(nodes, pairs)
-    got = {r["id"]: r["group_id"] for r in star_df.collect()}
-    assert got == ref
-    assert rounds <= 10
-
-
-def test_star_beats_label_prop_on_planted_chain(spark):
-    """A 256-node chain: min-label propagation needs ~255 rounds (one hop
-    per shuffle); large-star/small-star collapses it in O(log n)."""
-    from hfsa_spark.operators.dedup import connected_components_star
-
-    n = 256
-    nodes = spark.createDataFrame([(i,) for i in range(n)], ["id"])
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
-    star_df, rounds = connected_components_star(nodes, pairs)
-    labels = star_df.collect()
-    assert all(r["group_id"] == 0 for r in labels) and len(labels) == n
-    assert rounds <= 12, rounds
-
-
-def test_star_empty_pairs_and_isolated_nodes(spark):
-    from hfsa_spark.operators.dedup import connected_components_star
-
-    nodes = spark.createDataFrame([(1,), (2,), (3,)], ["id"])
-    pairs = spark.createDataFrame([], "id_a bigint, id_b bigint")
-    star_df, _ = connected_components_star(nodes, pairs)
-    assert {r["id"]: r["group_id"] for r in star_df.collect()} == {1: 1, 2: 2, 3: 3}
-
-
 def test_incremental_dedup(spark):
     from hfsa_spark.operators.dedup import exact_dedup_groups, incremental_dedup
 

@@ -221,35 +221,6 @@ def test_pagerank_checkpoint_flag_identical_and_audit_visible(spark):
     assert "Join" in plan
 
 
-def test_quarantine_invalid(spark):
-    from hfsa_spark.operators.features import quarantine_invalid
-
-    df = spark.createDataFrame(
-        [
-            (1, "good text", 10),
-            (2, "", 5),            # empty
-            (3, "negative n", -1),
-            (4, "", -2),           # both
-        ],
-        "doc_id bigint, text string, n bigint",
-    )
-    valid, bad = quarantine_invalid(
-        df,
-        {
-            "nonempty_text": F.length(F.trim("text")) > 0,
-            "nonnegative_n": F.col("n") >= 0,
-        },
-    )
-    assert [r["doc_id"] for r in valid.orderBy("doc_id").collect()] == [1]
-    got = {r["doc_id"]: sorted(r["failed_rules"])
-           for r in bad.orderBy("doc_id").collect()}
-    assert got == {
-        2: ["nonempty_text"],
-        3: ["nonnegative_n"],
-        4: ["nonempty_text", "nonnegative_n"],
-    }
-
-
 def test_winsorize_global_and_grouped(spark):
     from pyspark.sql import functions as F
 

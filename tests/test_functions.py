@@ -14,7 +14,13 @@ from hfsa_spark.functions.iec import format_iec, parse_iec
 from hfsa_spark.functions.ages import parse_age_ms
 from hfsa_spark.functions.paths import normalize_path, normalize_path_expr, ancestors
 from hfsa_spark.functions.perms import mode_octal_py, mode_rwx_py, mode_rwx, mode_octal
-from hfsa_spark.functions.sizes import consumed_size, file_size_from_blocks
+from hfsa_spark.functions.sizes import (
+    DEFAULT_REPL_FOR_STRIPED_BLOCKS,
+    consumed_size,
+    effective_replication,
+    file_size_from_blocks,
+    storage_policy_name,
+)
 
 
 class TestSizeBucket:
@@ -194,3 +200,19 @@ class TestSizes:
             consumed_size("blocks", "replication", "ec_policy_id").alias("c")
         ).head()
         assert row["c"] == 0
+
+    def test_effective_replication(self, spark):
+        """FsUtil.getFileReplication (FsUtil.java:60-65): every EC policy
+        reports the striped-block replication, a replicated file its own."""
+        rows = [(3, 0), (2, 0)] + [(3, pid) for pid in range(1, 6)]
+        df = spark.createDataFrame(rows, "replication int, ec_policy_id int")
+        got = df.select(effective_replication("replication", "ec_policy_id").alias("r")).collect()
+        assert [r["r"] for r in got] == [3, 2] + [DEFAULT_REPL_FOR_STRIPED_BLOCKS] * 5
+        assert DEFAULT_REPL_FOR_STRIPED_BLOCKS == 1
+
+    def test_storage_policy_name(self, spark):
+        """FsUtil.getBlockStoragePolicy (FsUtil.java:94-100): unset (0) and
+        an unknown id both fall back to HOT."""
+        df = spark.createDataFrame([(0,), (2,), (12,), (99,)], "sp int")
+        got = df.select(storage_policy_name("sp").alias("n")).collect()
+        assert [r["n"] for r in got] == ["HOT", "COLD", "ALL_SSD", "HOT"]

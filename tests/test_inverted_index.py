@@ -96,28 +96,3 @@ def test_segmented_index_matches_batch_and_replay_is_idempotent(spark, corpus):
         assert stats.count() == 2  # one row per segment, not three
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def test_compact_index_preserves_ranking(spark, corpus):
-    from hfsa_spark.operators.text import bm25_topk
-    from hfsa_spark.sinks.inverted_index import (
-        bm25_topk_indexed,
-        compact_index,
-        write_index_segment,
-    )
-
-    want = [tuple(r) for r in bm25_topk(corpus, QS, k=3).collect()]
-    src = tempfile.mkdtemp(prefix="invidx_cmp_src_")
-    dst = tempfile.mkdtemp(prefix="invidx_cmp_dst_")
-    try:
-        for seg in range(3):
-            write_index_segment(
-                corpus.filter(f"doc_id % 3 = {seg}"), src, seg, n_shards=2
-            )
-        compact_index(spark, src, dst, n_shards=2)
-        got = [tuple(r) for r in bm25_topk_indexed(spark, dst, QS, k=3).collect()]
-        assert got == want
-        assert spark.read.parquet(dst + "/stats").count() == 1
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)

@@ -1,15 +1,14 @@
-"""Tests for write-layout sinks (z-order clustering, compaction) and
-embedding normalization/quantization."""
+"""Tests for the z-order write-layout sink and embedding
+normalization/quantization."""
 
 import glob
-import math
 
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from hfsa_spark.operators.similarity import l2_normalize, l2_norm, quantize_embeddings
-from hfsa_spark.sinks.layout import write_compacted, write_zordered, zvalue
+from hfsa_spark.operators.similarity import l2_norm, l2_normalize_df, quantize_embeddings
+from hfsa_spark.sinks.layout import write_zordered, zvalue
 
 
 def _file_ranges(path, col):
@@ -77,36 +76,15 @@ def test_write_zordered_tightens_both_envelopes(spark, tmp_path):
     assert mean_span(zpath, "x") < 0.5 and mean_span(zpath, "y") < 0.5
 
 
-def test_write_compacted_file_count_and_rows(spark, tmp_path):
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(1000)], "id long, v string")
-    path = str(tmp_path / "c")
-    n = write_compacted(df, path, target_rows_per_file=120)
-    files = glob.glob(f"{path}/*.parquet")
-    assert n == math.ceil(1000 / 120) == 9
-    assert len(files) == 9
-    counts = [pq.ParquetFile(f).metadata.num_rows for f in files]
-    assert sum(counts) == 1000 and max(counts) <= 120
-    got = spark.read.parquet(path).count()
-    assert got == 1000
-
-
-def test_write_compacted_sorted_clusters(spark, tmp_path):
-    df = spark.createDataFrame([(i % 50, i) for i in range(2000)], "k long, v long")
-    path = str(tmp_path / "cs")
-    write_compacted(df, path, target_rows_per_file=500, sort_cols=["k"])
-    ranges = _file_ranges(path, "k")
-    # range-clustered: file envelopes on k must not all span the domain
-    assert sum(hi - lo for lo, hi in ranges) / len(ranges) < 49
-
-
 def test_l2_normalize_unit_norm_and_zero_vector(spark):
     df = spark.createDataFrame(
         [(1, [3.0, 4.0]), (2, [0.0, 0.0])], "id long, v array<double>"
     )
-    out = df.select("id", l2_normalize("v").alias("u"),
-                    l2_norm(l2_normalize("v")).alias("n")).collect()
+    normed = l2_normalize_df(df, "v", "u")
+    out = normed.select("id", "u", "l2_norm", l2_norm("u").alias("n")).collect()
     by = {r["id"]: r for r in out}
     assert by[1]["u"] == [0.6, 0.8] and abs(by[1]["n"] - 1.0) < 1e-12
+    assert by[1]["l2_norm"] == 5.0
     assert by[2]["u"] == [0.0, 0.0] and by[2]["n"] == 0.0
 
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from hfsa_spark.operators.multimodal import (
     extract_audio_features,
     extract_image_features,
-    resize_images,
     sample_frames,
     synthesize_media_table,
 )
@@ -44,14 +43,6 @@ def test_real_decode_unrecognized_payloads_yield_nulls(spark, docs):
     out = extract_image_features(media, fake=False).collect()
     assert len(out) == docs.count()
     assert all(r["width"] is None and r["phash"] is None for r in out)
-
-
-def test_resize_round_trip(spark, docs):
-    media = synthesize_media_table(docs, "image")
-    out = resize_images(media, 224, 224, fake=True).collect()
-    assert len(out) == 20
-    assert all(r["width"] == 224 and r["height"] == 224 for r in out)
-    assert all(isinstance(bytes(r["payload"]), bytes) and len(r["payload"]) == 32 for r in out)
 
 
 def test_audio_features(spark, docs):

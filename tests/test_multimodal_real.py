@@ -1,5 +1,5 @@
 """Real-decoder tests for the last two multimodal paths: uncompressed-BMP
-raster decode/resize and the ISO BMFF (MP4) container probe. Fixtures are
+raster decode and the ISO BMFF (MP4) container probe. Fixtures are
 written in-test from the public format layouts — no media libraries."""
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from hfsa_spark.operators.multimodal import (
     decode_image_batch,
     encode_bmp,
     parse_mp4,
-    resize_images,
     resize_nearest,
     sample_frames,
 )
@@ -55,30 +54,6 @@ def test_resize_nearest_semantics():
     # 2x downscale picks every odd source pixel
     half = resize_nearest(arr, 30, 50)
     assert np.array_equal(half, arr[1::2, 1::2])
-
-
-def test_resize_images_real_bmp(spark):
-    arr = _gradient(64, 48)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_bmp(arr)))],
-        "doc_id bigint, media_type string, payload binary",
-    )
-    rows = resize_images(media, 16, 16).collect()
-    assert len(rows) == 1 and rows[0]["width"] == 16
-    resized = decode_bmp(bytes(rows[0]["payload"]))
-    assert np.array_equal(resized, resize_nearest(arr, 16, 16))
-
-
-def test_resize_images_compressed_raises(spark):
-    png = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0dIHDR" + struct.pack(
-        ">IIBBBBB", 8, 8, 8, 2, 0, 0, 0
-    ) + b"\x00" * 20
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(png))],
-        "doc_id bigint, media_type string, payload binary",
-    )
-    with pytest.raises(Exception, match="codec"):
-        resize_images(media, 16, 16).collect()
 
 
 def test_decode_image_batch_real_bmp_pixel_stats():
@@ -337,28 +312,6 @@ def test_image_features_real_png_pixels(spark):
         assert round(rows[i]["mean_luma"] * 255000) == (base + 15) * 1000
 
 
-def test_resize_images_real_png(spark):
-    from hfsa_spark.operators.multimodal import (
-        decode_bmp,
-        decode_png,
-        encode_png,
-        resize_images,
-        resize_nearest,
-    )
-
-    rng = np.random.default_rng(3)
-    arr = rng.integers(0, 256, size=(24, 20, 4), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_png(arr, filter_type="mixed")))],
-        "doc_id bigint, media_type string, payload binary",
-    )
-    rows = resize_images(media, 8, 8).collect()
-    assert len(rows) == 1
-    got = decode_bmp(bytes(rows[0]["payload"]))
-    want = resize_nearest(arr[:, :, :3], 8, 8)
-    assert np.array_equal(got, want)
-
-
 # ------------------------------------------------------------------- GIF --
 
 
@@ -503,27 +456,6 @@ def test_image_features_real_jpeg_pixels(spark):
         luma = arr.astype(np.float64) @ [0.299, 0.587, 0.114]
         assert rows[i]["width"] == 16 and rows[i]["height"] == 16
         assert rows[i]["mean_luma"] == pytest.approx(luma.mean() / 255.0, abs=1e-12)
-
-
-def test_resize_images_real_jpeg(spark):
-    from hfsa_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from hfsa_spark.operators.multimodal import (
-        decode_bmp,
-        resize_images,
-        resize_nearest,
-    )
-
-    rng = np.random.default_rng(9)
-    arr = rng.integers(0, 256, (24, 32, 3), dtype=np.uint8)
-    payload = encode_jpeg(arr, 90)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(payload))],
-        "doc_id bigint, media_type string, payload binary",
-    )
-    rows = resize_images(media, 8, 8).collect()
-    got = decode_bmp(bytes(rows[0]["payload"]))
-    want = resize_nearest(decode_jpeg(payload), 8, 8)
-    assert np.array_equal(got, want)
 
 
 def test_jpeg_420_subsampling_roundtrip():

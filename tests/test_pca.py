@@ -1,5 +1,4 @@
-"""Distributed PCA: expression-moments vs Arrow-covariance equivalence,
-fit vs a plain numpy PCA on the collected data, projection properties,
+"""Embedding moments: expression-moments vs Arrow-covariance equivalence,
 and scene-change detection over MJPEG video (multimodal temporal op)."""
 
 from __future__ import annotations
@@ -8,12 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hfsa_spark.operators.pca import (
-    covariance_arrow,
-    embedding_moments,
-    pca_fit,
-    pca_project,
-)
+from hfsa_spark.operators.pca import covariance_arrow, embedding_moments
 
 
 def _emb_df(spark, n=200, dim=16, seed=7):
@@ -47,37 +41,6 @@ def test_arrow_covariance_matches_numpy(spark):
     mean, cov, n = covariance_arrow(df, "embedding", dim=16)
     assert np.allclose(mean, x.mean(axis=0), atol=1e-9)
     assert np.allclose(cov, np.cov(x.T, bias=True), atol=1e-9)
-
-
-def test_pca_fit_recovers_principal_axes(spark):
-    df, x = _emb_df(spark, n=200, dim=16)
-    model = pca_fit(df, "embedding", dim=16, k=4)
-    # eigenvalues descending and positive
-    ev = model["explained_variance"]
-    assert all(ev[i] >= ev[i + 1] for i in range(3)) and ev[0] > 0
-    # compare against numpy PCA on the same data (sign-normalized)
-    vals, vecs = np.linalg.eigh(np.cov(x.T, bias=True))
-    order = np.argsort(vals)[::-1][:4]
-    ref = vecs[:, order].T
-    for c_ref, c_got in zip(ref, model["components"]):
-        if c_ref[np.argmax(np.abs(c_ref))] < 0:
-            c_ref = -c_ref
-        assert np.allclose(np.abs(c_ref @ c_got), 1.0, atol=1e-6)
-
-
-def test_projection_shape_and_variance_order(spark):
-    df, x = _emb_df(spark, n=200, dim=16)
-    model = pca_fit(df, "embedding", dim=16, k=3)
-    proj = np.array(
-        [r.pc for r in pca_project(df, "vec_id", "embedding", model).orderBy("vec_id").collect()]
-    )
-    assert proj.shape == (200, 3)
-    # projected variance decreasing and matches eigenvalues
-    pv = proj.var(axis=0)
-    assert pv[0] >= pv[1] >= pv[2]
-    assert np.allclose(pv, model["explained_variance"], rtol=1e-6)
-    # centered: projection means ~ 0
-    assert np.allclose(proj.mean(axis=0), 0.0, atol=1e-9)
 
 
 def test_scene_changes_detects_planted_cut(spark):

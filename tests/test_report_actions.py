@@ -5,8 +5,11 @@ fields."""
 
 from __future__ import annotations
 
+import csv
+import io
 import re
 import uuid
+from itertools import takewhile
 
 import pytest
 from pyspark.sql import functions as F
@@ -116,3 +119,39 @@ def test_java_only_user_filter_runs_in_spark(principals):
     got = sf.collect_paths()
     assert [u for u, _ in got.users] == [r["user"] for r in sf.user_summary.collect()] == ["a"]
     assert got.total == len(NAMES) ** 2
+
+
+@pytest.mark.parametrize("sink", ["summary_txt", "summary_json", "summary_csv"])
+def test_summary_of_missing_dir_raises(built, sink):
+    with pytest.raises(FileNotFoundError, match="/nope"):
+        getattr(sinks, sink)(summary_report(built, dir="/nope"))
+
+
+def _txt_rows(txt: str, header: str) -> list[str]:
+    """The row lines under ``header`` (after its ruler), up to a blank line."""
+    lines = txt.splitlines()
+    start = next(i for i, ln in enumerate(lines) if ln.startswith(header))
+    while not lines[start].startswith("---"):
+        start += 1
+    return list(takewhile(bool, lines[start + 1 :]))
+
+
+def test_txt_sinks_print_null_names_as_csv_does(principals):
+    """A null user or group prints as the empty string, the name the csv
+    sink writes for it, in the same rows and order."""
+    rep = summary_report(principals)
+    csv_rows = list(csv.reader(io.StringIO(sinks.summary_csv(rep))))
+    txt = sinks.summary_txt(rep)
+    for kind, header in (("Group", "By group:"), ("User", "By user:")):
+        got = [ln.split(" | ")[0].strip() for ln in _txt_rows(txt, header)]
+        assert got == [r[1] for r in csv_rows if r[0] == kind]
+        assert "" in got
+
+    sf = small_files_report(principals)
+    csv_rows = list(csv.reader(io.StringIO(sinks.small_files_csv(sf))))
+    txt = sinks.small_files_txt(sf)
+    got = [ln.split(" | ")[0].strip() for ln in _txt_rows(txt, "Username | #Small files")]
+    assert got == [r[1] for r in csv_rows if r[0] == "User"]
+    assert "" in got
+    detail = _txt_rows(txt, "Username | Small files hotspots")
+    assert sum(ln.startswith("---") for ln in detail) == len(NAMES)

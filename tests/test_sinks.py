@@ -149,6 +149,17 @@ def test_small_files_txt_golden(small):
     assert out == SMALLFILES_GOLDEN
 
 
+def test_small_files_txt_headers_name_the_report_limits(small):
+    out = small_files_txt(small_files_report(small, hotspot_limit=2, user_hotspot_limit=2))
+    assert (
+        "#Small files  | Path (top 2) \n"
+        "-----------------------------\n"
+        "            3 | /\n"
+        "            2 | /test3\n\n"
+    ) in out
+    assert "Username | Small files hotspots (top 2 count/path)\n" in out
+
+
 def test_small_files_txt_comma_locale(small, monkeypatch):
     """Reference parity: the % column uses the PLATFORM locale decimal
     separator (SmallFilesReportCommandTest.java:13,54 pins ',' under

@@ -18,46 +18,6 @@ def _write_file(spark, base, idx, rows):
             os.rename(os.path.join(src, f), os.path.join(base, f"{idx:02d}.parquet"))
 
 
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    from hfsa_spark.streaming.dedup import streaming_exact_dedup
-
-    base = str(tmp_path / "docs_stream")
-    os.makedirs(base)
-    # batch 0: two distinct docs (one with whitespace-variant duplicate
-    # INSIDE the batch); batch 1: exact re-send of doc 1 + a new doc;
-    # batch 2: normalized-equal variant of doc 10 + a new doc
-    _write_file(spark, base, 0, [(1, "alpha beta"), (2, "alpha  BETA"), (10, "gamma delta")])
-    _write_file(spark, base, 1, [(3, "alpha beta"), (4, "epsilon")])
-    _write_file(spark, base, 2, [(5, "GAMMA   delta"), (6, "zeta")])
-
-    src = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(base)
-    )
-    q = (
-        streaming_exact_dedup(src)
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.sql("SELECT doc_id, digest FROM dedup_out").collect()
-    kept = sorted(r["doc_id"] for r in rows)
-    # one survivor per normalized text: {alpha beta}, {gamma delta},
-    # {epsilon}, {zeta}; docs 2 (in-batch dup), 3 and 5 (cross-batch dups)
-    # must be dropped
-    assert len(kept) == 4
-    assert 4 in kept and 6 in kept
-    assert kept.count(3) == 0 and kept.count(5) == 0
-    assert len({r["digest"] for r in rows}) == 4
-
-
 def test_streaming_ingest_dedup_pipeline(spark, tmp_path):
     """End-to-end continuous ingestion: three micro-batches with duplicates
     inside a batch, across batches, and against already-ingested docs —
