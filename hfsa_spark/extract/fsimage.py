@@ -15,44 +15,47 @@ Sections consumed (same four as the reference):
 * INODE_DIR        — parent → children adjacency (packed varints)
 * INODE_REFERENCE  — snapshot/rename indirection for refChildren
 
-Scale: full message *decode* is distributed. The driver walks only the
-delimited-message varint length prefixes of the INODE / INODE_DIR sections
-(read length, skip payload — O(#messages) cheap byte reads, no field
-decoding) to emit byte-range chunk specs; executors then read their
-(offset, length) slice and decode messages in parallel via Arrow
-``mapInPandas`` (``load_fsimage(distributed=True)``, auto-enabled past
-``_DISTRIBUTED_THRESHOLD`` section bytes). Parent wiring is a distributed
-join of the inode rows against (parent, child) edges decoded from the
-INODE_DIR section — no O(#inodes) driver dict — and paths are then
-materialized by ``pathmat.materialize_paths``' level-join. Compressed images
-(gzip / DefaultCodec are not splittable) are streaming-decompressed once,
-driver-side with constant memory, into a scratch file that the chunk reads
-then address; by default it lives in the session's ``SparkFiles`` root,
-which Spark removes when the session stops. In cluster mode point
-``scratch_dir`` at storage every executor can read.
+One section reader serves both load routes, as hfsa opens every section
+through one codec stream (``FsImageLoader.java:252-277``). ``_read_footer``
+parses the FileSummary once; ``_iter_section`` decodes one section from a
+bounded ``_FileSlice`` and yields its decompressed pieces. It holds the
+codec dispatch, so every codec follows one set of rules on every route: a
+truncated stream raises, concatenated gzip and bzip2 members are read, and
+an lzop container must use up its section exactly.
 
-Small images stay on the single-pass driver path (``parse_fsimage``) — no
-executor round-trip for a 2 KB test image. That route already holds every
-row and the parent map in Python, so ``pathmat.resolve_paths`` walks the
-tree there and the rows enter Spark once, paths set: no Spark job per
-namespace level.
+Small images take the driver route (``parse_fsimage``): it seeks to each
+section, joins its pieces, decodes every message in Python, and
+``pathmat.resolve_paths`` walks the tree there, so the rows enter Spark
+once with their paths set and no Spark job runs per namespace level.
+
+Big images (``load_fsimage(distributed=True)``, auto-enabled past
+``_DISTRIBUTED_THRESHOLD`` INODE bytes) decode their messages on the
+executors. A compressed image first has its INODE and INODE_DIR pieces
+written once, driver-side at constant memory, to a scratch file; by
+default it lives in the session's ``SparkFiles`` root, which Spark removes
+when the session stops (in cluster mode point ``scratch_dir`` at storage
+every executor can read). The driver then walks only the delimited-message
+length prefixes to cut byte-range chunks, executors decode the chunks via
+Arrow ``mapInPandas``, parents are wired by a join against the INODE_DIR
+edges, and ``pathmat.materialize_paths`` builds the paths level by level.
 """
 
 from __future__ import annotations
 
 import gzip
 import hashlib
-import io
 import mmap
 import os
 import struct
 import zlib
 from dataclasses import dataclass, field
+from itertools import islice
+from typing import Iterator
 
 from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
-from hfsa_spark.schema import INODES_SCHEMA, ROOT_INODE_ID
+from hfsa_spark.schema import INODES_SCHEMA
 from hfsa_spark.extract.pathmat import finalize_inodes, materialize_paths, resolve_paths
 
 MAGIC = b"HDFSIMG1"
@@ -120,21 +123,18 @@ def _packed_varints(val: int | bytes) -> list[int]:
     return out
 
 
-class _DelimitedReader:
-    """Reader over a section's (decompressed) bytes: writeDelimitedTo framing
-    (varint length prefix per message)."""
+_TRUNCATED = "truncated section: the message at offset {pos} declares {ln} bytes, {left} remain"
 
-    def __init__(self, data: bytes):
-        self._data = data
-        self._pos = 0
 
-    def next_message(self) -> bytes | None:
-        if self._pos >= len(self._data):
-            return None
-        ln, self._pos = _read_varint(self._data, self._pos)
-        msg = self._data[self._pos : self._pos + ln]
-        self._pos += ln
-        return msg
+def _messages(buf, pos: int = 0) -> Iterator[bytes]:
+    """The messages of a section's (decompressed) bytes from ``pos`` on:
+    writeDelimitedTo framing (varint length prefix per message)."""
+    while pos < len(buf):
+        ln, pos = _read_varint(buf, pos)
+        if pos + ln > len(buf):
+            raise ValueError(_TRUNCATED.format(pos=pos, ln=ln, left=len(buf) - pos))
+        yield buf[pos : pos + ln]
+        pos += ln
 
 
 # ------------------------------------------------------- section parsing --
@@ -166,15 +166,20 @@ class _StringTable:
         return self.entries.get(sid, "") or ""
 
 
-def _parse_file_summary(raw: bytes) -> tuple[str, list[_Section]]:
-    if not raw.startswith(MAGIC):
-        raise ValueError("not an fsimage: missing HDFSIMG1 magic header")
-    (summary_len,) = struct.unpack_from(">i", raw, len(raw) - 4)
-    reader = _DelimitedReader(raw[len(raw) - 4 - summary_len : len(raw) - 4])
-    msg = reader.next_message()
+def _read_footer(path: str) -> tuple[str, list[_Section]]:
+    """Codec and section index from the FileSummary footer, read from the
+    file head (magic) and tail only: the one FileSummary parser."""
+    with open(path, "rb") as f:
+        if f.read(len(MAGIC)) != MAGIC:
+            raise ValueError("not an fsimage: missing HDFSIMG1 magic header")
+        f.seek(-4, os.SEEK_END)
+        end = f.tell()
+        (summary_len,) = struct.unpack(">i", f.read(4))
+        f.seek(end - summary_len)
+        summary = f.read(summary_len)
     codec = ""
     sections: list[_Section] = []
-    for fno, val in _iter_fields(msg):
+    for fno, val in _iter_fields(next(_messages(summary))):
         if fno == 3:
             codec = val.decode("utf-8")
         elif fno == 4:
@@ -188,6 +193,135 @@ def _parse_file_summary(raw: bytes) -> tuple[str, list[_Section]]:
                     offset = sval
             sections.append(_Section(name, length, offset))
     return codec, sections
+
+
+def _section(sections: list[_Section], name: str) -> _Section:
+    for s in sections:
+        if s.name == name:
+            return s
+    raise KeyError(f"no section {name} in fsimage (have {[s.name for s in sections]})")
+
+
+class _FileSlice:
+    """Bounded read-only file-like over ``[offset, offset+length)`` of a
+    file: the input of :func:`_iter_section`. Implements what the stdlib
+    decompressor files and :func:`pyarrow.input_stream` need
+    (read/readable/closed/close); never reads past the slice end, so a
+    decompressor fed from it cannot wander into the next section."""
+
+    def __init__(self, path: str, offset: int, length: int) -> None:
+        self._f = open(path, "rb")
+        self._f.seek(offset)
+        self._remaining = length
+        self.closed = False
+
+    def __enter__(self) -> _FileSlice:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def readable(self) -> bool:
+        return True
+
+    def writable(self) -> bool:
+        return False
+
+    def seekable(self) -> bool:
+        return False
+
+    def read(self, n: int = -1) -> bytes:
+        if n is None or n < 0 or n > self._remaining:
+            n = self._remaining
+        if n == 0:
+            return b""
+        data = self._f.read(n)
+        self._remaining -= len(data)
+        return data
+
+    def close(self) -> None:
+        if not self.closed:
+            self._f.close()
+            self.closed = True
+
+
+# Bytes per read of compressed input, and per yielded piece of output where
+# the decompressor lets the reader choose.
+_PIECE = 8 << 20
+
+
+def _codec_tail(codec: str) -> str:
+    """Lower-cased class-name tail of a Hadoop codec class name."""
+    return codec.rsplit(".", 1)[-1].lower()
+
+
+def _iter_section(src, codec: str) -> Iterator[bytes]:
+    """Decompress one section read from the bounded reader ``src`` (a
+    :class:`_FileSlice`, or ``io.BytesIO``) into an iterator of pieces: the
+    one codec dispatch of the read side. It matches Hadoop's factory set
+    (`FsImageLoader.java:268`): Gzip, Default (zlib), Lz4, Snappy, BZip2,
+    ZStandard, plus the hadoop-lzo plugin's LzoCodec (BlockCompressorStream
+    framing over the clean-room LZO1X decoder in ``extract/lzo.py``) and
+    LzopCodec (the lzop file container in ``extract/lzop.py``).
+
+    A truncated stream raises. Concatenated gzip and bzip2 members are all
+    read, zero padding after a gzip member is skipped and other bytes there
+    raise, as in :func:`gzip.decompress`; bytes after a bzip2 stream that
+    are no bzip2 stream, and bytes after the one zlib stream, are ignored,
+    as in :func:`bz2.decompress` and :func:`zlib.decompress`. An lzop
+    container must use up its section exactly."""
+    kind = _codec_tail(codec)
+    if not kind:
+        return _pieces(src)
+    if "gzip" in kind:
+        return _pieces(gzip.GzipFile(fileobj=src))
+    if "default" in kind:  # DefaultCodec = zlib-framed deflate
+        return _zlib_pieces(src)
+    if "lzop" in kind:
+        return _lzop_pieces(src)
+    if "lzo" in kind:
+        return _block_stream(src, "lzo")
+    if "lz4" in kind:
+        return _block_stream(src, "lz4_raw")
+    if "snappy" in kind:
+        return _block_stream(src, "snappy")
+    if "bzip2" in kind:  # BZip2Codec writes a standard .bz2 stream
+        import bz2
+
+        return _pieces(bz2.BZ2File(src))
+    if "zstandard" in kind or "zstd" in kind:  # standard zstd frames
+        import pyarrow as pa
+
+        return _pieces(pa.input_stream(src, compression="zstd"))
+    raise ValueError(f"unsupported fsimage codec: {codec}")
+
+
+def _pieces(stream) -> Iterator[bytes]:
+    while piece := stream.read(_PIECE):
+        yield piece
+
+
+def _zlib_pieces(src) -> Iterator[bytes]:
+    d = zlib.decompressobj()
+    while not d.eof and (block := src.read(_PIECE)):
+        yield d.decompress(block)
+    if not d.eof:
+        raise zlib.error("incomplete or truncated DefaultCodec stream")
+
+
+def _lzop_pieces(src) -> Iterator[bytes]:
+    from hfsa_spark.extract.lzop import lzop_blocks
+
+    yield from lzop_blocks(src)
+    if src.read(1):
+        # hfsa wraps a bounded stream in the codec and never requires it
+        # to drain (FsImageLoader.java:268): slack after an lzop end
+        # marker is rejected here until a real lzop image shows whether
+        # hadoop-lzo ever writes any
+        raise ValueError(
+            "corrupt lzop section: trailing bytes after the end-of-stream"
+            " marker, not consumed by the container"
+        )
 
 
 def _snappy_chunk_size(chunk: bytes) -> int:
@@ -249,140 +383,80 @@ def _lz4_chunk_size(chunk: bytes) -> int:
     return total
 
 
-def _chunk_decompressed_size(arrow_codec: str, chunk: bytes) -> int:
-    return (
-        _snappy_chunk_size(chunk)
-        if arrow_codec == "snappy"
-        else _lz4_chunk_size(chunk)
-    )
-
-
-def _block_stream_decompress(data: bytes, arrow_codec: str) -> bytes:
-    """Hadoop BlockCompressorStream framing — what Lz4Codec and
-    SnappyCodec's ``createInputStream`` expects (the reference accepts
-    any factory codec via ``FSImageUtil.wrapInputStreamForCompression``,
-    `lib/.../core/FsImageLoader.java:268`): repeated blocks of
+def _block_stream(src, arrow_codec: str) -> Iterator[bytes]:
+    """Hadoop BlockCompressorStream framing, what Lz4Codec, SnappyCodec and
+    hadoop-lzo's LzoCodec ``createInputStream`` expect: repeated blocks of
     ``[origBlockSize int32-BE] [chunkLen int32-BE] [chunk bytes]…``,
     chunks repeating until the block's ``origBlockSize`` bytes are
     produced. Chunk payloads are the codec's RAW block format (no frame
-    header) — pyarrow's ``lz4_raw`` / ``snappy`` codecs, or the
-    clean-room LZO1X decoder (``extract/lzo.py``) for the hadoop-lzo
-    plugin's ``LzoCodec`` (same BlockCompressorStream framing).
+    header): pyarrow's ``lz4_raw`` / ``snappy`` codecs, or the clean-room
+    LZO1X decoder (``extract/lzo.py``) for ``"lzo"``. Yields one piece per
+    chunk. Fewer than 4 bytes where a block header would start end the
+    stream, as in Hadoop's ``BlockDecompressorStream``.
 
-    Each chunk is decompressed at its EXACT size, derived from the
-    chunk bytes themselves (:func:`_chunk_decompressed_size`): pyarrow
-    requires the size up front, and padding it with ``orig - produced``
-    is only correct for single-chunk blocks — for a multi-chunk block
-    it silently appends garbage (the writer↔reader blind spot the r8
-    judge flagged; pinned by tests/test_codec_vectors.py)."""
+    Each lz4/snappy chunk is decompressed at its EXACT size, derived from
+    the chunk bytes themselves: pyarrow requires the size up front, and
+    padding it with ``orig - produced`` is only correct for single-chunk
+    blocks — for a multi-chunk block it silently appends garbage (pinned
+    by tests/test_codec_vectors.py). LZO discovers its own size and is
+    capped at the block's remaining bytes mid-decode, since a
+    run-length-extended instruction can expand ~255x."""
     if arrow_codec == "lzo":
-        c = None
+        from hfsa_spark.extract.lzo import lzo1x_decompress
     else:
         import pyarrow as pa
 
         c = pa.Codec(arrow_codec)
-    out = bytearray()
-    pos, n = 0, len(data)
-    while pos + 4 <= n:
-        (orig,) = struct.unpack_from(">i", data, pos)
+        chunk_size = _snappy_chunk_size if arrow_codec == "snappy" else _lz4_chunk_size
+    pos = 0  # section offset, for the error messages
+    while len(head := src.read(4)) == 4:
+        (orig,) = struct.unpack(">i", head)
         pos += 4
         produced = 0
         while produced < orig:
-            if pos + 4 > n:
-                raise ValueError(
-                    f"truncated {arrow_codec} block stream at offset {pos}"
-                )
-            (clen,) = struct.unpack_from(">i", data, pos)
+            head = src.read(4)
+            if len(head) < 4:
+                raise ValueError(f"truncated {arrow_codec} block stream at offset {pos}")
+            (clen,) = struct.unpack(">i", head)
             pos += 4
-            if clen < 0 or pos + clen > n:
+            chunk = src.read(clen) if clen > 0 else b""
+            if clen < 0 or len(chunk) < clen:
                 raise ValueError(
                     f"truncated {arrow_codec} block stream at offset {pos}"
                     f" (chunk length {clen})"
                 )
-            chunk = data[pos : pos + clen]
-            if c is None:  # lzo: our decoder discovers the size itself
-                from hfsa_spark.extract.lzo import lzo1x_decompress
-
-                # max_size aborts mid-decode: a run-length-extended
-                # instruction can expand ~255x, so cap BEFORE the copy
+            if arrow_codec == "lzo":
                 dec = lzo1x_decompress(chunk, max_size=orig - produced)
-                if produced + len(dec) > orig:
-                    raise ValueError(
-                        f"corrupt {arrow_codec} block stream: chunk at"
-                        f" offset {pos} decompresses past its block"
-                    )
             else:
-                expect = _chunk_decompressed_size(arrow_codec, chunk)
+                expect = chunk_size(chunk)
                 if produced + expect > orig:
                     raise ValueError(
                         f"corrupt {arrow_codec} block stream: chunk at offset"
                         f" {pos} decompresses past its block"
                     )
-                dec = c.decompress(
-                    chunk, decompressed_size=expect, asbytes=True
-                )
+                dec = c.decompress(chunk, decompressed_size=expect, asbytes=True)
             pos += clen
             produced += len(dec)
-            out += dec
-    return bytes(out)
+            yield dec
 
 
-def _decompress(codec: str, data: bytes) -> bytes:
-    """Accept-anything codec dispatch matching Hadoop's factory set
-    (`FsImageLoader.java:268`): Gzip, Default (zlib), Lz4, Snappy,
-    BZip2, ZStandard — plus the hadoop-lzo plugin's LzoCodec via a
-    clean-room LZO1X decoder written from the public stream format
-    (``extract/lzo.py``; no GPL code used or linked) and its LzopCodec
-    via the lzop FILE-format container on the same decoder
-    (``extract/lzop.py``). That completes the factory-resolvable set."""
-    if not codec:
-        return data
-    lower = codec.rsplit(".", 1)[-1].lower()  # class-name tail
-    if "gzip" in lower:
-        return gzip.decompress(data)
-    if "default" in lower:  # DefaultCodec = zlib-framed deflate
-        return zlib.decompress(data)
-    if "lzop" in lower:  # hadoop-lzo LzopCodec: lzop file framing + LZO1X
-        from hfsa_spark.extract.lzop import lzop_decompress
-
-        return lzop_decompress(data)
-    if "lzo" in lower:  # hadoop-lzo LzoCodec: BlockCompressorStream + LZO1X
-        return _block_stream_decompress(data, "lzo")
-    if "lz4" in lower:
-        return _block_stream_decompress(data, "lz4_raw")
-    if "snappy" in lower:
-        return _block_stream_decompress(data, "snappy")
-    if "bzip2" in lower:  # BZip2Codec writes a standard .bz2 stream
-        import bz2
-
-        return bz2.decompress(data)
-    if "zstandard" in lower or "zstd" in lower:  # standard zstd frames
-        import pyarrow as pa
-
-        stream = pa.input_stream(pa.BufferReader(data), compression="zstd")
-        return stream.read()
-    raise ValueError(f"unsupported fsimage codec: {codec}")
-
-
-def _section_bytes(raw: bytes, codec: str, sections: list[_Section], name: str) -> bytes:
-    for s in sections:
-        if s.name == name:
-            return _decompress(codec, raw[s.offset : s.offset + s.length])
-    raise KeyError(f"no section {name} in fsimage (have {[s.name for s in sections]})")
+def _read_section(path: str, codec: str, sections: list[_Section], name: str) -> bytes:
+    """One whole decompressed section, read by seeking to it."""
+    s = _section(sections, name)
+    with _FileSlice(path, s.offset, s.length) as src:
+        return b"".join(_iter_section(src, codec))
 
 
 def _parse_string_table(data: bytes) -> _StringTable:
-    reader = _DelimitedReader(data)
-    header = reader.next_message()
+    msgs = _messages(data)
     num_entry, mask_bits = 0, 0
-    for fno, val in _iter_fields(header):
+    for fno, val in _iter_fields(next(msgs)):
         if fno == 1:
             num_entry = val
         elif fno == 2:
             mask_bits = val
     table = _StringTable(mask_bits=mask_bits)
-    for _ in range(num_entry):
-        msg = reader.next_message()
+    for msg in islice(msgs, num_entry):
         sid, text = 0, ""
         for fno, val in _iter_fields(msg):
             if fno == 1:
@@ -394,9 +468,8 @@ def _parse_string_table(data: bytes) -> _StringTable:
 
 
 def _parse_inode_references(data: bytes) -> list[int]:
-    reader = _DelimitedReader(data)
     refs: list[int] = []
-    while (msg := reader.next_message()) is not None:
+    for msg in _messages(data):
         referred = 0
         for fno, val in _iter_fields(msg):
             if fno == 1:
@@ -405,12 +478,25 @@ def _parse_inode_references(data: bytes) -> list[int]:
     return refs
 
 
-def _parse_dir_section(data: bytes, ref_ids: list[int]) -> dict[int, list[int]]:
-    """parent id → child inode ids; refChildren resolved through the
-    reference table (FsImageLoader.java:315-340 semantics)."""
-    reader = _DelimitedReader(data)
-    dir_map: dict[int, list[int]] = {}
-    while (msg := reader.next_message()) is not None:
+def _read_tables(
+    path: str, codec: str, sections: list[_Section]
+) -> tuple[_StringTable, list[int]]:
+    """The user/group table and the INODE_REFERENCE ids (an image without
+    snapshots or renames may carry no such section), which every inode and
+    directory entry decode needs."""
+    table = _parse_string_table(_read_section(path, codec, sections, "STRING_TABLE"))
+    if not any(s.name == "INODE_REFERENCE" for s in sections):
+        return table, []
+    return table, _parse_inode_references(
+        _read_section(path, codec, sections, "INODE_REFERENCE")
+    )
+
+
+def _dir_entries(data, ref_ids: list[int]) -> Iterator[tuple[int, list[int]]]:
+    """(parent id, child inode ids) per INODE_DIR entry in ``data``;
+    refChildren resolved through the reference table
+    (FsImageLoader.java:315-340 semantics)."""
+    for msg in _messages(data):
         parent = 0
         children: list[int] = []
         for fno, val in _iter_fields(msg):
@@ -420,8 +506,18 @@ def _parse_dir_section(data: bytes, ref_ids: list[int]) -> dict[int, list[int]]:
                 children.extend(_packed_varints(val))
             elif fno == 3:
                 children.extend(ref_ids[r] for r in _packed_varints(val))
-        dir_map[parent] = children
-    return dir_map
+        yield parent, children
+
+
+def _inode_header(buf, pos: int) -> tuple[int, int]:
+    """The INodeSection header {lastInodeId, numInodes} at ``pos``:
+    (numInodes, offset of the first INode message)."""
+    ln, pos = _read_varint(buf, pos)
+    num_inodes = 0
+    for fno, val in _iter_fields(bytes(buf[pos : pos + ln])):
+        if fno == 2:
+            num_inodes = val
+    return num_inodes, pos + ln
 
 
 # ACL entry packing (public Hadoop FSImageFormatPBINode layout): bits 0-2
@@ -564,42 +660,27 @@ def _parse_inode(msg: bytes, table: _StringTable) -> dict:
     return row
 
 
-def parse_fsimage(path: str) -> list[dict]:
+def parse_fsimage(
+    path: str, footer: tuple[str, list[_Section]] | None = None
+) -> list[dict]:
     """Parse an fsimage file into raw inode row dicts with ``parent_id``
-    wired from the directory section (paths NOT yet materialized)."""
-    with open(path, "rb") as f:
-        raw = f.read()
-    codec, sections = _parse_file_summary(raw)
-
-    table = _parse_string_table(_section_bytes(raw, codec, sections, "STRING_TABLE"))
-    try:
-        ref_ids = _parse_inode_references(
-            _section_bytes(raw, codec, sections, "INODE_REFERENCE")
-        )
-    except KeyError:
-        ref_ids = []
-    dir_map = _parse_dir_section(
-        _section_bytes(raw, codec, sections, "INODE_DIR"), ref_ids
+    wired from the directory section (paths NOT yet materialized).
+    ``footer`` is :func:`_read_footer`'s result when the caller has read it
+    already."""
+    codec, sections = footer or _read_footer(path)
+    table, ref_ids = _read_tables(path, codec, sections)
+    dir_map = dict(
+        _dir_entries(_read_section(path, codec, sections, "INODE_DIR"), ref_ids)
     )
-
-    inode_data = _section_bytes(raw, codec, sections, "INODE")
-    reader = _DelimitedReader(inode_data)
-    header = reader.next_message()  # INodeSection {lastInodeId, numInodes}
-    num_inodes = 0
-    for fno, val in _iter_fields(header):
-        if fno == 2:
-            num_inodes = val
-
     parent_of: dict[int, int] = {}
     for parent, children in dir_map.items():
         for c in children:
             parent_of[c] = parent
 
+    inode_data = _read_section(path, codec, sections, "INODE")
+    num_inodes, pos = _inode_header(inode_data, 0)
     rows = []
-    for _ in range(num_inodes):
-        msg = reader.next_message()
-        if msg is None:
-            break
+    for msg in islice(_messages(inode_data, pos), num_inodes):
         row = _parse_inode(msg, table)
         row["parent_id"] = parent_of.get(row["id"])
         rows.append(row)
@@ -609,94 +690,8 @@ def parse_fsimage(path: str) -> list[dict]:
 # ------------------------------------------------- distributed decoding --
 
 
-def _read_footer(path: str) -> tuple[str, list[_Section]]:
-    """Parse codec + section index from the FileSummary footer by reading
-    only the file head (magic) and tail — no full-image read."""
-    with open(path, "rb") as f:
-        if f.read(len(MAGIC)) != MAGIC:
-            raise ValueError("not an fsimage: missing HDFSIMG1 magic header")
-        f.seek(-4, os.SEEK_END)
-        end = f.tell()
-        (summary_len,) = struct.unpack(">i", f.read(4))
-        f.seek(end - summary_len)
-        summary = f.read(summary_len)
-    reader = _DelimitedReader(summary)
-    msg = reader.next_message()
-    codec = ""
-    sections: list[_Section] = []
-    for fno, val in _iter_fields(msg):
-        if fno == 3:
-            codec = val.decode("utf-8")
-        elif fno == 4:
-            name, length, offset = "", 0, 0
-            for sfno, sval in _iter_fields(val):
-                if sfno == 1:
-                    name = sval.decode("utf-8")
-                elif sfno == 2:
-                    length = sval
-                elif sfno == 3:
-                    offset = sval
-            sections.append(_Section(name, length, offset))
-    return codec, sections
-
-
-def _read_section(path: str, codec: str, sections: list[_Section], name: str) -> bytes:
-    """Read + decompress ONE section by seeking — for the small sections
-    (STRING_TABLE, INODE_REFERENCE, the INODE header) only."""
-    for s in sections:
-        if s.name == name:
-            with open(path, "rb") as f:
-                f.seek(s.offset)
-                return _decompress(codec, f.read(s.length))
-    raise KeyError(f"no section {name} in fsimage (have {[s.name for s in sections]})")
-
-
-class _FileSlice:
-    """Bounded read-only file-like over ``[offset, offset+length)`` of a
-    file — the input side of the constant-memory streaming decompress.
-    Implements just what :func:`pyarrow.input_stream` needs to wrap a
-    raw Python stream (read/readable/closed/close); never reads past
-    the slice end, so a decompressor fed from it cannot wander into the
-    next fsimage section."""
-
-    def __init__(self, path: str, offset: int, length: int) -> None:
-        self._f = open(path, "rb")
-        self._f.seek(offset)
-        self._remaining = length
-        self.closed = False
-
-    def readable(self) -> bool:
-        return True
-
-    def writable(self) -> bool:
-        return False
-
-    def seekable(self) -> bool:
-        return False
-
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0 or n > self._remaining:
-            n = self._remaining
-        if n == 0:
-            return b""
-        data = self._f.read(n)
-        self._remaining -= len(data)
-        return data
-
-    def close(self) -> None:
-        if not self.closed:
-            self._f.close()
-            self.closed = True
-
-
-def _lzo_parallel_min() -> int:
-    """Section size above which LZO decode goes block-parallel
-    (default 32 MiB; env-overridable so tests can exercise the path
-    on small fixtures)."""
-    try:
-        return int(os.environ.get("HFSA_LZO_PARALLEL_MIN", 32 << 20))
-    except ValueError:
-        return 32 << 20
+# Section size from which an LZO section decodes block-parallel.
+_LZO_PARALLEL_MIN = 32 << 20
 
 
 def _scan_lzo_block_stream(
@@ -808,155 +803,27 @@ def _decompress_lzo_to_file_parallel(
     return total
 
 
-def _decompress_to_file(
-    src: str, offset: int, length: int, dst, codec: str = ""
-) -> int:
-    """Streaming decompress (constant memory) of a compressed section
-    into an open scratch file; returns decompressed byte count. Same
-    codec set as :func:`_decompress`; gzip/Default go through one zlib
-    decompressobj (wbits=47 auto-detects both framings), the block
-    codecs stream block-by-block, bzip2/zstd through their incremental
-    decompressors."""
-    lower = codec.rsplit(".", 1)[-1].lower() if codec else ""
-    written = 0
-    if "lzop" in lower:
-        from hfsa_spark.extract.lzop import lzop_decompress_file
+def _write_section(path: str, codec: str, s: _Section, dst) -> int:
+    """Decompress section ``s`` into the open scratch file ``dst`` at
+    constant memory; returns the decompressed byte count.
 
-        with open(src, "rb") as f:
-            f.seek(offset)
-            # the lzop container is self-delimiting (0-length end block)
-            # and the streaming reader holds one ≤64 MiB block at a time
-            def sink(chunk: bytes) -> None:
-                nonlocal written
-                dst.write(chunk)
-                written += len(chunk)
-
-            lzop_decompress_file(f, sink)
-            consumed = f.tell() - offset
-            if consumed != length:
-                # exact consumption, both directions: an over-run means the
-                # container escaped the section; an under-run means trailing
-                # section bytes the parser never looked at (same strict
-                # leftover contract as the other block codecs).
-                # Compat risk (ADVICE r11): the reference loader wraps a
-                # bounded stream in the codec and never requires the codec
-                # to drain it (FsImageLoader.java:268) — a real
-                # hadoop-lzo-written image whose lzop section carried slack
-                # after the end marker would be rejected here. Kept strict
-                # deliberately; if a real-image lzop corpus ever becomes
-                # available, verify sections are byte-exact there before
-                # relaxing.
-                raise ValueError(
-                    f"corrupt lzop section: container consumed {consumed}"
-                    f" of {length} section bytes"
-                )
-        return written
-    is_lzo = "lzo" in lower
-    if is_lzo and length >= _lzo_parallel_min():
-        # pure-Python LZO1X decodes at ~14 MB/s on instruction-dense
-        # streams (extract/lzo.py docstring) — a multi-GB section would
-        # stall the driver for minutes on the sequential path. Decode
-        # block-parallel across a local process pool instead; falls
-        # back to the exact sequential walk when the optimistic framing
-        # scan or any worker's validated decode rejects the section.
-        done = _decompress_lzo_to_file_parallel(src, offset, length, dst)
+    Pure-Python LZO1X decodes at ~14 MB/s on instruction-dense streams
+    (extract/lzo.py docstring), so an LzoCodec section of at least
+    ``_LZO_PARALLEL_MIN`` bytes is decoded block-parallel across a local
+    process pool instead; that path hands back to the sequential
+    :func:`_iter_section` when its framing scan or any worker's validated
+    decode rejects the section."""
+    kind = _codec_tail(codec)
+    if "lzo" in kind and "lzop" not in kind and s.length >= _LZO_PARALLEL_MIN:
+        done = _decompress_lzo_to_file_parallel(path, s.offset, s.length, dst)
         if done is not None:
             return done
-    if "lz4" in lower or "snappy" in lower or is_lzo:
-        if is_lzo:
-            c = None
-        else:
-            import pyarrow as pa
-
-            c = pa.Codec("lz4_raw" if "lz4" in lower else "snappy")
-        with open(src, "rb") as f:
-            f.seek(offset)
-            end = offset + length
-            while f.tell() + 4 <= end:
-                (orig,) = struct.unpack(">i", f.read(4))
-                produced = 0
-                while produced < orig:
-                    # every inner read stays inside the section: a
-                    # truncated/corrupt section must raise the same
-                    # clear error as _block_stream_decompress, not
-                    # read into the NEXT section and return garbage
-                    if f.tell() + 4 > end:
-                        raise ValueError(
-                            f"truncated {lower} block stream at offset"
-                            f" {f.tell() - offset}"
-                        )
-                    (clen,) = struct.unpack(">i", f.read(4))
-                    if clen < 0 or f.tell() + clen > end:
-                        raise ValueError(
-                            f"truncated {lower} block stream at offset"
-                            f" {f.tell() - offset} (chunk length {clen})"
-                        )
-                    chunk = f.read(clen)
-                    if c is None:  # lzo discovers its own size
-                        from hfsa_spark.extract.lzo import lzo1x_decompress
-
-                        dec = lzo1x_decompress(chunk, max_size=orig - produced)
-                        if produced + len(dec) > orig:
-                            raise ValueError(
-                                f"corrupt {lower} block stream: chunk at"
-                                f" offset {f.tell() - offset - clen}"
-                                " decompresses past its block"
-                            )
-                    else:
-                        arrow = "lz4_raw" if "lz4" in lower else "snappy"
-                        expect = _chunk_decompressed_size(arrow, chunk)
-                        if produced + expect > orig:
-                            raise ValueError(
-                                f"corrupt {lower} block stream: chunk at"
-                                f" offset {f.tell() - offset - clen}"
-                                " decompresses past its block"
-                            )
-                        dec = c.decompress(
-                            chunk, decompressed_size=expect, asbytes=True
-                        )
-                    produced += len(dec)
-                    dst.write(dec)
-                    written += len(dec)
-        return written
-    if "bzip2" in lower:
-        import bz2
-
-        d = bz2.BZ2Decompressor()
-        decomp, flush = d.decompress, lambda: b""
-    elif "zstandard" in lower or "zstd" in lower:
-        import pyarrow as pa
-
-        # pyarrow has no incremental zstd decompressor object; feed its
-        # input_stream wrapper from a BOUNDED file slice so neither the
-        # compressed nor the decompressed section is ever materialized
-        # — constant memory, matching this function's contract
-        stream = pa.input_stream(
-            _FileSlice(src, offset, length), compression="zstd"
-        )
-        while True:
-            out = stream.read(8 << 20)
-            if not out:
-                break
-            dst.write(out)
-            written += len(out)
-        return written
-    else:
-        d = zlib.decompressobj(wbits=47)
-        decomp, flush = d.decompress, lambda: d.flush()
-    with open(src, "rb") as f:
-        f.seek(offset)
-        remaining = length
-        while remaining > 0:
-            block = f.read(min(8 << 20, remaining))
-            if not block:
-                break
-            remaining -= len(block)
-            out = decomp(block)
-            dst.write(out)
-            written += len(out)
-    tail = flush()
-    dst.write(tail)
-    return written + len(tail)
+    written = 0
+    with _FileSlice(path, s.offset, s.length) as src:
+        for piece in _iter_section(src, codec):
+            dst.write(piece)
+            written += len(piece)
+    return written
 
 
 def _scan_chunks(
@@ -970,6 +837,8 @@ def _scan_chunks(
     pos, chunk_start, n, seen = start, start, 0, 0
     while pos < end and (max_msgs is None or seen < max_msgs):
         ln, pos = _read_varint(buf, pos)
+        if pos + ln > end:
+            raise ValueError(_TRUNCATED.format(pos=pos, ln=ln, left=end - pos))
         pos += ln
         n += 1
         seen += 1
@@ -996,9 +865,9 @@ def _materialize_big_sections(
     Uncompressed: the image itself (zero copy). Compressed: one streaming
     driver-side decompress into an idempotent scratch file (keyed on image
     identity) under ``scratch_dir`` that chunk reads then address."""
-    by_name = {s.name: s for s in sections}
+    wanted = [_section(sections, n) for n in names]
     if not codec:
-        return path, {n: (by_name[n].offset, by_name[n].length) for n in names}
+        return path, {s.name: (s.offset, s.length) for s in wanted}
 
     st = os.stat(path)
     key = hashlib.sha1(
@@ -1016,18 +885,27 @@ def _materialize_big_sections(
             return scratch, spans
 
     spans = {}
-    with open(scratch + ".tmp", "wb") as out:
-        cursor = 0
-        for n in names:
-            s = by_name[n]
-            written = _decompress_to_file(path, s.offset, s.length, out, codec)
-            spans[n] = (cursor, written)
-            cursor += written
+    try:
+        with open(scratch + ".tmp", "wb") as out:
+            cursor = 0
+            for s in wanted:
+                written = _write_section(path, codec, s, out)
+                spans[s.name] = (cursor, written)
+                cursor += written
+    except BaseException:
+        os.remove(scratch + ".tmp")  # a damaged section leaves no partial copy
+        raise
     os.replace(scratch + ".tmp", scratch)
     with open(meta + ".tmp", "w") as f:
         f.write("\n".join(f"{n}\t{o}\t{ln}" for n, (o, ln) in spans.items()))
     os.replace(meta + ".tmp", meta)
     return scratch, spans
+
+
+def _read_chunk(spec) -> bytes:
+    with open(spec.data_path, "rb") as f:
+        f.seek(spec.offset)
+        return f.read(spec.length)
 
 
 def _decode_inode_chunks(table: _StringTable):
@@ -1041,15 +919,8 @@ def _decode_inode_chunks(table: _StringTable):
     def decode(batches):
         for pdf in batches:
             for spec in pdf.itertuples(index=False):
-                with open(spec.data_path, "rb") as f:
-                    f.seek(spec.offset)
-                    data = f.read(spec.length)
-                reader = _DelimitedReader(data)
                 rows = []
-                for _ in range(int(spec.n_msgs)):
-                    msg = reader.next_message()
-                    if msg is None:
-                        break
+                for msg in islice(_messages(_read_chunk(spec)), int(spec.n_msgs)):
                     r = _parse_inode(msg, table)
                     r["blocks"] = (
                         None
@@ -1073,25 +944,9 @@ def _decode_edge_chunks(ref_ids: list[int]):
     def decode(batches):
         for pdf in batches:
             for spec in pdf.itertuples(index=False):
-                with open(spec.data_path, "rb") as f:
-                    f.seek(spec.offset)
-                    data = f.read(spec.length)
-                reader = _DelimitedReader(data)
                 parents: list[int] = []
                 children: list[int] = []
-                for _ in range(int(spec.n_msgs)):
-                    msg = reader.next_message()
-                    if msg is None:
-                        break
-                    parent = 0
-                    kids: list[int] = []
-                    for fno, val in _iter_fields(msg):
-                        if fno == 1:
-                            parent = val
-                        elif fno == 2:
-                            kids.extend(_packed_varints(val))
-                        elif fno == 3:
-                            kids.extend(ref_ids[r] for r in _packed_varints(val))
+                for parent, kids in _dir_entries(_read_chunk(spec), ref_ids):
                     parents.extend([parent] * len(kids))
                     children.extend(kids)
                 yield pd.DataFrame({"parent_id": parents, "id": children})
@@ -1104,6 +959,7 @@ def load_fsimage_distributed(
     path: str,
     target_chunk_bytes: int | None = None,
     scratch_dir: str | None = None,
+    footer: tuple[str, list[_Section]] | None = None,
 ) -> DataFrame:
     """fsimage → raw inode DataFrame with executor-parallel message decode
     (module docstring has the design). Returns the same raw columns as the
@@ -1116,17 +972,10 @@ def load_fsimage_distributed(
 
     ``scratch_dir=None`` puts a compressed image's decompressed sections in
     the session's ``SparkFiles`` root directory, which Spark deletes when
-    the session stops; an explicit ``scratch_dir`` is kept."""
-    codec, sections = _read_footer(path)
-
-    table = _parse_string_table(_read_section(path, codec, sections, "STRING_TABLE"))
-    try:
-        ref_ids = _parse_inode_references(
-            _read_section(path, codec, sections, "INODE_REFERENCE")
-        )
-    except KeyError:
-        ref_ids = []
-
+    the session stops; an explicit ``scratch_dir`` is kept. ``footer`` is
+    :func:`_read_footer`'s result when the caller has read it already."""
+    codec, sections = footer or _read_footer(path)
+    table, ref_ids = _read_tables(path, codec, sections)
     data_path, spans = _materialize_big_sections(
         path, codec, sections, ["INODE", "INODE_DIR"],
         scratch_dir or SparkFiles.getRootDirectory(),
@@ -1143,14 +992,9 @@ def load_fsimage_distributed(
     mv = memoryview(mm)
     try:
         ino_off, ino_len = spans["INODE"]
-        header_len, body_start = _read_varint(mv, ino_off)
-        num_inodes = 0
-        for fno, val in _iter_fields(bytes(mv[body_start : body_start + header_len])):
-            if fno == 2:
-                num_inodes = val
+        num_inodes, body_start = _inode_header(mv, ino_off)
         inode_chunks = _scan_chunks(
-            mv, body_start + header_len, ino_off + ino_len,
-            target_chunk_bytes, max_msgs=num_inodes,
+            mv, body_start, ino_off + ino_len, target_chunk_bytes, max_msgs=num_inodes,
         )
         dir_off, dir_len = spans["INODE_DIR"]
         dir_chunks = _scan_chunks(mv, dir_off, dir_off + dir_len, target_chunk_bytes)
@@ -1314,18 +1158,18 @@ def load_fsimage(
     auto-selects on INODE section size), path materialization (driver-side
     ``resolve_paths`` on the driver route, the ``materialize_paths``
     level-join on the distributed one) + derived size columns."""
+    footer = _read_footer(path)
     if distributed is None:
-        _, sections = _read_footer(path)
-        ino = next((s.length for s in sections if s.name == "INODE"), 0)
+        ino = next((s.length for s in footer[1] if s.name == "INODE"), 0)
         distributed = ino >= _DISTRIBUTED_THRESHOLD
     if distributed:
         raw = load_fsimage_distributed(
             spark, path, target_chunk_bytes=target_chunk_bytes,
-            scratch_dir=scratch_dir,
+            scratch_dir=scratch_dir, footer=footer,
         )
         inodes = materialize_paths(raw)
     else:
-        rows = parse_fsimage(path)
+        rows = parse_fsimage(path, footer=footer)
         inodes = spark.createDataFrame(
             [
                 tuple(rows[i][f] for f in _RAW_FIELDS) + (p, full_path, depth)

@@ -48,10 +48,11 @@ Scale posture: pure-Python decode runs ~14 MB/s on instruction-dense
 extract — the 100 TB architecture reads the materialized parquet, never
 the image, after that — and (b) LZO images exist only on clusters that
 deliberately installed the out-of-tree plugin; the bundled codecs all
-decode at C speed. Big sections no longer pay it:
-``fsimage._decompress_to_file`` routes LZO sections >= 32 MiB through
-a block-parallel process pool (measured 22 -> 360 MB/s on a 315 MB
-section, round 10), with exact sequential fallback.
+decode at C speed. Big sections no longer pay it: the scratch-file
+writer ``fsimage._write_section`` decodes LZO sections of at least
+``fsimage._LZO_PARALLEL_MIN`` (32 MiB) in a block-parallel process pool
+(measured 22 -> 360 MB/s on a 315 MB section, round 10), and falls back
+to the exact sequential ``fsimage._iter_section``.
 """
 
 from __future__ import annotations

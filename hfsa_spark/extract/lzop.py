@@ -47,7 +47,8 @@ Scale posture: identical to ``lzo.py`` — an fsimage section decompresses
 ONCE per extract, the 100 TB architecture reads materialized parquet
 thereafter, and the streaming reader below never holds more than one
 block (≤ a few MiB) plus its output in memory, so multi-GB lzop
-sections flow through ``_decompress_to_file`` at bounded memory.
+sections flow through ``fsimage._iter_section`` at bounded memory. That
+reader also requires the container to use up its section exactly.
 """
 
 from __future__ import annotations
@@ -55,11 +56,11 @@ from __future__ import annotations
 import io
 import struct
 import zlib
-from typing import BinaryIO, Callable
+from typing import BinaryIO, Iterator
 
 from hfsa_spark.extract.lzo import lzo1x_compress_greedy, lzo1x_decompress
 
-__all__ = ["LZOP_MAGIC", "lzop_decompress", "lzop_decompress_file", "lzop_compress"]
+__all__ = ["LZOP_MAGIC", "lzop_blocks", "lzop_compress"]
 
 LZOP_MAGIC = b"\x89LZO\x00\r\n\x1a\n"
 
@@ -133,25 +134,19 @@ def _read_header(f: BinaryIO) -> int:
     return flags
 
 
-def lzop_decompress_file(
-    f: BinaryIO,
-    write: Callable[[bytes], object],
-    *,
-    verify_checksums: bool = True,
-) -> int:
-    """Stream-decode one lzop file from ``f`` (positioned at the magic),
-    emitting decompressed bytes through ``write``; returns the byte count.
+def lzop_blocks(f: BinaryIO, *, verify_checksums: bool = True) -> Iterator[bytes]:
+    """Stream-decode one lzop file from ``f`` (positioned at the magic) and
+    yield its decompressed blocks; stops right after the end marker.
     Holds one block at a time — multi-GB sections run at bounded memory."""
     flags = _read_header(f)
     d_crc32 = bool(flags & F_CRC32_D)
     c_crc32 = bool(flags & F_CRC32_C)
     has_d = bool(flags & (F_ADLER32_D | F_CRC32_D))
     has_c = bool(flags & (F_ADLER32_C | F_CRC32_C))
-    total = 0
     while True:
         (ulen,) = struct.unpack(">I", _read_exact(f, 4, "block header"))
         if ulen == 0:  # end-of-stream marker
-            return total
+            return
         if ulen > _MAX_BLOCK:
             raise ValueError(
                 f"corrupt lzop stream: block claims {ulen} bytes"
@@ -187,24 +182,7 @@ def lzop_decompress_file(
                     f"corrupt lzop stream: uncompressed-data checksum"
                     f" {got:#010x} != stored {d_sum:#010x}"
                 )
-        write(out)
-        total += len(out)
-
-
-def lzop_decompress(data: bytes, *, verify_checksums: bool = True) -> bytes:
-    """Decode one in-memory lzop file to bytes. The buffer must contain
-    exactly one lzop member: bytes after the 0-length end marker (a second
-    concatenated member, or corruption) are rejected, matching the strict
-    leftover checks of the other block codecs."""
-    out = bytearray()
-    buf = io.BytesIO(data)
-    lzop_decompress_file(buf, out.extend, verify_checksums=verify_checksums)
-    if buf.tell() != len(data):
-        raise ValueError(
-            f"corrupt lzop stream: {len(data) - buf.tell()} trailing bytes"
-            " after the end-of-stream marker"
-        )
-    return bytes(out)
+        yield out
 
 
 class LzopWriter:

@@ -1,5 +1,6 @@
-"""Bucketed-table layout: co-located join plan contract (zero exchanges,
-zero sorts) and incremental agg-state merge algebra."""
+"""Bucketed-table layout (``sinks.layout.write_bucketed``): co-located join
+and groupBy plan contract (zero exchanges, zero sorts), its unbucketed
+control, and incremental agg-state merge algebra."""
 
 from __future__ import annotations
 
@@ -8,7 +9,11 @@ import re
 
 from pyspark.sql import functions as F
 
+from hfsa_spark.plans import explain_str, num_exchanges, session_conf
+
 SF_DIR = "/root/testdata/sf0.001"
+# tiny fixtures fit the broadcast threshold, which would hide co-location
+NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 def test_bucketed_join_no_exchange_no_sort(spark, tmp_path):
@@ -30,12 +35,7 @@ def test_bucketed_join_no_exchange_no_sort(spark, tmp_path):
         )
         # at test SF the dim side fits the broadcast threshold, which
         # would hide the co-location; pin the merge-join contract
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        prev_ord = spark.conf.get(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "false"
-        )
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        with session_conf(spark, NO_BROADCAST):
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "SortMergeJoin" in plan
             assert "Exchange" not in plan  # co-located: paid at write
@@ -43,20 +43,15 @@ def test_bucketed_join_no_exchange_no_sort(spark, tmp_path):
 
             # sort elimination additionally needs the one-file-per-bucket
             # scan-ordering conf (off by default since 3.0, SPARK-19256)
-            spark.conf.set(
-                "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-            )
-            joined2 = o.join(c, o.o_custkey == c.c_custkey).select(
-                "o_orderkey", "c_mktsegment"
-            )
-            plan2 = joined2._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan2
-            assert not re.search(r"\bSort\b(?!MergeJoin)", plan2)  # sorted
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.conf.set(
-                "spark.sql.legacy.bucketedTableScan.outputOrdering", prev_ord
-            )
+            with session_conf(
+                spark, {"spark.sql.legacy.bucketedTableScan.outputOrdering": "true"}
+            ):
+                joined2 = o.join(c, o.o_custkey == c.c_custkey).select(
+                    "o_orderkey", "c_mktsegment"
+                )
+                plan2 = joined2._jdf.queryExecution().executedPlan().toString()
+                assert "Exchange" not in plan2
+                assert not re.search(r"\bSort\b(?!MergeJoin)", plan2)  # sorted
 
         # values identical to the unbucketed join
         expect = (
@@ -66,6 +61,33 @@ def test_bucketed_join_no_exchange_no_sort(spark, tmp_path):
     finally:
         drop_bucketed(spark, "tb_orders")
         drop_bucketed(spark, "tb_customer")
+
+
+def test_bucketed_groupby_has_no_exchange(spark, tmp_path):
+    """groupBy on the bucket key reads the buckets as its partitioning."""
+    from hfsa_spark.sinks.layout import drop_bucketed, write_bucketed
+
+    docs = spark.range(0, 1000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("lang_id")
+    )
+    try:
+        write_bucketed(docs, "tb_docs", str(tmp_path / "d"), "doc_id", 8)
+        agg = spark.table("tb_docs").groupBy("doc_id").count()
+        assert num_exchanges(agg) == 0, explain_str(agg, "simple")
+        assert agg.count() == 1000
+    finally:
+        drop_bucketed(spark, "tb_docs")
+
+
+def test_unbucketed_join_does_shuffle(spark, tmp_path):
+    """Control: the same join over plain parquet has exchanges, so the
+    exchange-free bucketed plans above are the layout's doing."""
+    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
+    spark.range(0, 1000).select(F.col("id").alias("doc_id")).write.parquet(p1)
+    spark.range(0, 1000).select(F.col("id").alias("doc_id")).write.parquet(p2)
+    with session_conf(spark, NO_BROADCAST):
+        joined = spark.read.parquet(p1).join(spark.read.parquet(p2), "doc_id")
+        assert num_exchanges(joined) >= 2
 
 
 def test_agg_state_merge_equals_recompute(spark):

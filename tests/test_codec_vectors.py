@@ -30,16 +30,27 @@ vectors pin the byte-level contract that acceptance implies.
 from __future__ import annotations
 
 import bz2
+import io
 import struct
 
 import pyarrow as pa
 import pytest
 
 from hfsa_spark.extract.fsimage import (
-    _block_stream_decompress,
-    _decompress,
-    _decompress_to_file,
+    _Section,
+    _block_stream,
+    _iter_section,
+    _write_section,
 )
+
+
+def _read(codec: str, data: bytes) -> bytes:
+    """The whole-section read of ``data`` under the codec class ``codec``."""
+    return b"".join(_iter_section(io.BytesIO(data), codec))
+
+
+def _read_blocks(data: bytes, arrow_codec: str) -> bytes:
+    return b"".join(_block_stream(io.BytesIO(data), arrow_codec))
 
 
 def _chunk(codec: str, raw: bytes) -> bytes:
@@ -67,8 +78,8 @@ VECTORS = {
 def test_single_block_single_chunk(cls, arrow):
     payload = b"hello fsimage section " * 40
     stream = _block(arrow, [payload])
-    assert _decompress(cls, stream) == payload
-    assert _block_stream_decompress(stream, arrow) == payload
+    assert _read(cls, stream) == payload
+    assert _read_blocks(stream, arrow) == payload
 
 
 @pytest.mark.parametrize("cls,arrow", sorted(VECTORS.items()))
@@ -79,14 +90,14 @@ def test_single_block_multiple_chunks(cls, arrow):
     truncates silently here."""
     a, b, c = b"A" * 7000, b"B" * 5000, b"C" * 300
     stream = _block(arrow, [a, b, c])
-    assert _decompress(cls, stream) == a + b + c
+    assert _read(cls, stream) == a + b + c
 
 
 @pytest.mark.parametrize("cls,arrow", sorted(VECTORS.items()))
 def test_multiple_blocks(cls, arrow):
     blocks = [b"first block " * 100, b"second " * 64, b"x"]
     stream = b"".join(_block(arrow, [blk]) for blk in blocks)
-    assert _decompress(cls, stream) == b"".join(blocks)
+    assert _read(cls, stream) == b"".join(blocks)
 
 
 @pytest.mark.parametrize("cls,arrow", sorted(VECTORS.items()))
@@ -100,12 +111,12 @@ def test_incompressible_chunk_longer_than_original(cls, arrow):
     stream = _block(arrow, [payload])
     comp_len = len(stream) - 8
     assert comp_len >= len(payload)  # vector really is expanded
-    assert _decompress(cls, stream) == payload
+    assert _read(cls, stream) == payload
 
 
 @pytest.mark.parametrize("cls,arrow", sorted(VECTORS.items()))
 def test_streaming_twin_matches_vector(cls, arrow, tmp_path):
-    """The file-streaming decoder (_decompress_to_file) must accept the
+    """The scratch-file writer (_write_section) must accept the
     same externally-framed bytes, embedded mid-file between foreign
     sections, and produce identical output."""
     payload1 = b"inode section payload " * 500
@@ -117,7 +128,7 @@ def test_streaming_twin_matches_vector(cls, arrow, tmp_path):
     img.write_bytes(b"HDFSIMG1" + stream + b"NEXT_SECTION")
     out = tmp_path / "out.bin"
     with open(out, "wb") as dst:
-        n = _decompress_to_file(str(img), 8, len(stream), dst, codec=cls)
+        n = _write_section(str(img), cls, _Section("INODE", len(stream), 8), dst)
     assert n == len(payload1) + len(payload2)
     assert out.read_bytes() == payload1 + payload2
 
@@ -126,29 +137,29 @@ def test_bzip2_standard_stream():
     """BZip2Codec wraps CompressorStream: the section is ONE standard
     .bz2 stream (no Hadoop framing) — vector from the stdlib encoder."""
     payload = b"bzip2 section " * 1000
-    assert _decompress("BZip2Codec", bz2.compress(payload, 9)) == payload
+    assert _read("BZip2Codec", bz2.compress(payload, 9)) == payload
 
 
 def test_zstd_standard_frame(tmp_path):
     """ZStandardCodec likewise emits a standard zstd frame; both the
-    in-memory and the bounded streaming decoder must accept one
+    whole-section read and the scratch-file writer must accept one
     produced straight by the codec library (no writer involved)."""
     payload = b"zstd section " * 2000
     frame = pa.Codec("zstd").compress(payload, asbytes=True)
-    assert _decompress("ZStandardCodec", frame) == payload
+    assert _read("ZStandardCodec", frame) == payload
     img = tmp_path / "img.bin"
     img.write_bytes(b"PAD" + frame + b"PAD")
     out = tmp_path / "o.bin"
     with open(out, "wb") as dst:
-        n = _decompress_to_file(str(img), 3, len(frame), dst,
-                                codec="ZStandardCodec")
+        n = _write_section(str(img), "ZStandardCodec",
+                           _Section("INODE", len(frame), 3), dst)
     assert n == len(payload)
     assert out.read_bytes() == payload
 
 
 def test_truncated_vector_raises_not_wanders():
     """Cutting the stream mid-chunk must raise the truncation error —
-    the in-memory decoder's bound check, vector-pinned."""
+    the section reader's bound check, vector-pinned."""
     stream = _block("lz4_raw", [b"Z" * 4096])
     with pytest.raises(ValueError, match="truncated"):
-        _block_stream_decompress(stream[:-10] , "lz4_raw")
+        _read_blocks(stream[:-10] , "lz4_raw")

@@ -3,7 +3,8 @@
 Three resolvers must agree row for row: the driver route's
 ``resolve_paths`` (``load_fsimage(distributed=False)``), the distributed
 route's executor decode + ``materialize_paths`` level-join, and
-``materialize_paths`` over the driver parse. The image carries the shapes
+``materialize_paths`` over the driver parse, on an image written with each
+of the writer's nine codecs. The image carries the shapes
 where they could part: files in ``/``, a deep directory chain, an empty
 directory, a symlink, and an orphan inode that no INODE_DIR entry lists
 (it parses with ``parent_id=None``; only ``ROOT_INODE_ID`` is a root, so
@@ -69,9 +70,14 @@ def _equal(a: DataFrame, b: DataFrame) -> bool:
     return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
-def test_driver_distributed_and_levels_agree(spark, tmp_path, monkeypatch):
+# every codec write_fsimage encodes: each route must read each one alike
+CODECS = [None, "default", "gzip", "lz4", "snappy", "bzip2", "zstd", "lzo", "lzop"]
+
+
+@pytest.mark.parametrize("codec", CODECS)
+def test_driver_distributed_and_levels_agree(spark, tmp_path, monkeypatch, codec):
     img = str(tmp_path / "paths.img")
-    write_fsimage(img, _namespace(), codec="gzip")
+    write_fsimage(img, _namespace(), codec=codec)
     cols = [f.name for f in INODES_SCHEMA.fields]
 
     driver = load_fsimage(spark, img, distributed=False)

@@ -173,15 +173,16 @@ def test_max_size_cap_aborts_before_materializing():
 
 def test_block_stream_oversize_lzo_chunk_aborts_early():
     # frame a chunk whose payload expands past the block header's size:
-    # _block_stream_decompress must reject via the in-decoder cap
+    # the section reader must reject via the in-decoder cap
+    import io
     import struct
 
-    from hfsa_spark.extract.fsimage import _block_stream_decompress
+    from hfsa_spark.extract.fsimage import _iter_section
 
     payload = lzo1x_compress_greedy(b"z" * 4096)
     frame = struct.pack(">i", 16) + struct.pack(">i", len(payload)) + payload
     with pytest.raises(ValueError, match="byte cap|past its block"):
-        _block_stream_decompress(frame, "lzo")
+        b"".join(_iter_section(io.BytesIO(frame), "LzoCodec"))
 
 
 # ----------------------- differential vs a real LZO implementation --
@@ -289,11 +290,12 @@ def _block_stream(chunks):
 
 def test_parallel_lzo_section_matches_sequential(tmp_path, monkeypatch):
     import hashlib
-    import io
 
+    import hfsa_spark.extract.fsimage as fsimage
     from hfsa_spark.extract.fsimage import (
+        _Section,
         _decompress_lzo_to_file_parallel,
-        _decompress_to_file,
+        _write_section,
     )
 
     # ~200 blocks mixing compressible and stored-ish payloads
@@ -308,22 +310,23 @@ def test_parallel_lzo_section_matches_sequential(tmp_path, monkeypatch):
     src = tmp_path / "sec.bin"
     src.write_bytes(b"HDR!" + stream + b"TRAILER")  # section inside a file
 
+    section = _Section("INODE", len(stream), 4)
     seq = tmp_path / "seq.out"
     with open(seq, "wb") as f:
-        n_seq = _decompress_to_file(str(src), 4, len(stream), f, "LzoCodec")
+        n_seq = _write_section(str(src), "LzoCodec", section, f)
     par = tmp_path / "par.out"
     with open(par, "wb") as f:
         n_par = _decompress_lzo_to_file_parallel(str(src), 4, len(stream), f)
     assert n_par == n_seq == sum(o for o, _ in blocks)
     assert par.read_bytes() == seq.read_bytes()
 
-    # and the integrated path picks the parallel branch under the env
-    # threshold override, producing identical bytes again
-    monkeypatch.setenv("HFSA_LZO_PARALLEL_MIN", "1")
+    # and the integrated path picks the parallel branch under a lowered
+    # threshold, producing identical bytes again
+    monkeypatch.setattr(fsimage, "_LZO_PARALLEL_MIN", 1)
     via = tmp_path / "via.out"
     with open(via, "wb") as f:
         f.write(b"prefix--")  # parallel write must respect prior content
-        n_via = _decompress_to_file(str(src), 4, len(stream), f, "LzoCodec")
+        n_via = _write_section(str(src), "LzoCodec", section, f)
     assert n_via == n_seq
     assert via.read_bytes() == b"prefix--" + seq.read_bytes()
 
@@ -334,10 +337,12 @@ def test_parallel_lzo_falls_back_on_multichunk_blocks(tmp_path, monkeypatch):
     decode it exactly (the r9 multi-chunk regression fixture shape)."""
     import struct
 
+    import hfsa_spark.extract.fsimage as fsimage
     from hfsa_spark.extract.fsimage import (
+        _Section,
         _decompress_lzo_to_file_parallel,
-        _decompress_to_file,
         _scan_lzo_block_stream,
+        _write_section,
     )
 
     a, b = b"x" * 5000, b"y" * 3000
@@ -356,8 +361,8 @@ def test_parallel_lzo_falls_back_on_multichunk_blocks(tmp_path, monkeypatch):
         )
         is None
     )
-    monkeypatch.setenv("HFSA_LZO_PARALLEL_MIN", "1")
+    monkeypatch.setattr(fsimage, "_LZO_PARALLEL_MIN", 1)
     out = tmp_path / "mc.out"
     with open(out, "wb") as f:
-        n = _decompress_to_file(str(src), 0, len(stream), f, "LzoCodec")
+        n = _write_section(str(src), "LzoCodec", _Section("INODE", len(stream), 0), f)
     assert n == 8000 and out.read_bytes() == a + b

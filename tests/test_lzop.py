@@ -15,14 +15,14 @@ import zlib
 
 import pytest
 
-from hfsa_spark.extract.lzop import (
-    LZOP_MAGIC,
-    LzopWriter,
-    lzop_compress,
-    lzop_decompress,
-    lzop_decompress_file,
-)
+from hfsa_spark.extract.fsimage import _Section, _iter_section, _write_section
+from hfsa_spark.extract.lzop import LZOP_MAGIC, LzopWriter, lzop_blocks, lzop_compress
 from tests.test_fsimage import H3_2, needs
+
+
+def _read(data: bytes) -> bytes:
+    """``data`` read as one whole LzopCodec section."""
+    return b"".join(_iter_section(io.BytesIO(data), "LzopCodec"))
 
 # ------------------------------------------------ hand-assembled file --
 
@@ -53,7 +53,7 @@ def test_hand_assembled_compressed_block_adler_both_sides():
     blk += struct.pack(">I", zlib.adler32(A100) & 0xFFFFFFFF)
     blk += struct.pack(">I", zlib.adler32(A100_LZO) & 0xFFFFFFFF)
     blk += A100_LZO
-    assert lzop_decompress(_file(flags, blk)) == A100
+    assert _read(_file(flags, blk)) == A100
 
 
 def test_hand_assembled_stored_block():
@@ -63,13 +63,13 @@ def test_hand_assembled_stored_block():
     blk = struct.pack(">II", len(data), len(data))
     blk += struct.pack(">I", zlib.adler32(data) & 0xFFFFFFFF)
     blk += data
-    assert lzop_decompress(_file(flags, blk)) == data
+    assert _read(_file(flags, blk)) == data
 
 
 def test_hand_assembled_no_checksums_and_multi_block():
     blk1 = struct.pack(">II", 100, len(A100_LZO)) + A100_LZO
     blk2 = struct.pack(">II", 3, 3) + b"xyz"
-    assert lzop_decompress(_file(0, blk1 + blk2)) == A100 + b"xyz"
+    assert _read(_file(0, blk1 + blk2)) == A100 + b"xyz"
 
 
 def test_hand_assembled_crc32_variant():
@@ -79,12 +79,12 @@ def test_hand_assembled_crc32_variant():
     blk += struct.pack(">I", zlib.crc32(A100) & 0xFFFFFFFF)
     blk += struct.pack(">I", zlib.crc32(A100_LZO) & 0xFFFFFFFF)
     blk += A100_LZO
-    assert lzop_decompress(_file(flags, blk, crc32_hdr=True)) == A100
+    assert _read(_file(flags, blk, crc32_hdr=True)) == A100
 
 
 def test_empty_payload():
-    assert lzop_decompress(_file(0, b"")) == b""
-    assert lzop_decompress(lzop_compress(b"")) == b""
+    assert _read(_file(0, b"")) == b""
+    assert _read(lzop_compress(b"")) == b""
 
 
 # ------------------------------------------------------------- errors --
@@ -92,7 +92,7 @@ def test_empty_payload():
 
 def test_bad_magic():
     with pytest.raises(ValueError, match="bad magic"):
-        lzop_decompress(b"\x89LZX\x00\r\n\x1a\n" + b"\x00" * 40)
+        _read(b"\x89LZX\x00\r\n\x1a\n" + b"\x00" * 40)
 
 
 def test_header_checksum_mismatch():
@@ -100,7 +100,7 @@ def test_header_checksum_mismatch():
     bad = bytearray(good)
     bad[11] ^= 0xFF  # flip a byte inside the checksummed span
     with pytest.raises(ValueError, match="header checksum"):
-        lzop_decompress(bytes(bad))
+        _read(bytes(bad))
 
 
 def test_block_checksum_mismatches():
@@ -110,34 +110,35 @@ def test_block_checksum_mismatches():
     blk += struct.pack(">I", zlib.adler32(A100_LZO) & 0xFFFFFFFF)
     blk += A100_LZO
     with pytest.raises(ValueError, match="uncompressed-data checksum"):
-        lzop_decompress(_file(flags, blk))
+        _read(_file(flags, blk))
     blk2 = struct.pack(">II", 100, len(A100_LZO))
     blk2 += struct.pack(">I", zlib.adler32(A100) & 0xFFFFFFFF)
     blk2 += struct.pack(">I", (zlib.adler32(A100_LZO) ^ 1) & 0xFFFFFFFF)
     blk2 += A100_LZO
     with pytest.raises(ValueError, match="compressed-data checksum"):
-        lzop_decompress(_file(flags, blk2))
+        _read(_file(flags, blk2))
     # verify_checksums=False tolerates both (salvage mode)
-    assert lzop_decompress(_file(flags, blk), verify_checksums=False) == A100
+    salvaged = lzop_blocks(io.BytesIO(_file(flags, blk)), verify_checksums=False)
+    assert b"".join(salvaged) == A100
 
 
 def test_rejected_features_and_corruption():
     with pytest.raises(ValueError, match="F_H_FILTER"):
-        lzop_decompress(_header(0x0800) )
+        _read(_header(0x0800) )
     with pytest.raises(ValueError, match="F_MULTIPART"):
-        lzop_decompress(_header(0x0400))
+        _read(_header(0x0400))
     with pytest.raises(ValueError, match="version"):
-        lzop_decompress(_header(0, version=0x0920))
+        _read(_header(0, version=0x0920))
     with pytest.raises(ValueError, match="method"):
-        lzop_decompress(_header(0, method=42))
+        _read(_header(0, method=42))
     with pytest.raises(ValueError, match="truncated"):
-        lzop_decompress(_header(0))  # no end marker
+        _read(_header(0))  # no end marker
     blk = struct.pack(">II", 2, 5) + b"xxxxx"  # clen > ulen
     with pytest.raises(ValueError, match="exceeds"):
-        lzop_decompress(_file(0, blk))
+        _read(_file(0, blk))
     blk = struct.pack(">II", 1 << 30, 4) + b"xxxx"  # absurd block size
     with pytest.raises(ValueError, match="maximum"):
-        lzop_decompress(_file(0, blk))
+        _read(_file(0, blk))
 
 
 # -------------------------------------------------- writer round-trip --
@@ -152,7 +153,7 @@ def test_writer_roundtrip_sizes(n):
     motif = b"0123456789abcdef" * 64
     data = (motif * (n // len(motif) + 1))[: n // 2]
     data += hashlib.shake_256(f"lzop{n}".encode()).digest(n - len(data))
-    assert lzop_decompress(lzop_compress(data)) == data
+    assert _read(lzop_compress(data)) == data
 
 
 def test_writer_emits_stored_blocks_for_incompressible_data():
@@ -163,7 +164,7 @@ def test_writer_emits_stored_blocks_for_incompressible_data():
     body = enc[len(LZOP_MAGIC) + 25 + 4 :]  # past header+checksum
     ulen, clen = struct.unpack_from(">II", body)
     assert (ulen, clen) == (4096, 4096)  # stored, not expanded
-    assert lzop_decompress(enc) == data
+    assert _read(enc) == data
 
 
 def test_streaming_file_reader_bounded(tmp_path):
@@ -178,10 +179,9 @@ def test_streaming_file_reader_bounded(tmp_path):
         end = f.tell()
         f.write(b"NEXT SECTION")
     with open(path, "rb") as f:
-        out = bytearray()
-        n = lzop_decompress_file(f, out.extend)
+        out = b"".join(lzop_blocks(f))
         assert f.tell() == end  # did not read into the next section
-    assert n == len(data) and bytes(out) == data
+    assert len(out) == len(data) and out == data
 
 
 @needs(H3_2)
@@ -215,15 +215,15 @@ def test_section_exact_consumption(tmp_path):
     the container never looked at) is as corrupt as an over-run."""
     import tempfile
 
-    from hfsa_spark.extract.fsimage import _decompress_to_file
-
     payload = lzop_compress(b"hello lzop section")
     src = tmp_path / "sect.bin"
     src.write_bytes(payload + b"JUNK")  # 4 unconsumed trailing bytes
     with tempfile.TemporaryFile() as out:
         # exact length: fine
-        n = _decompress_to_file(str(src), 0, len(payload), out, "LzopCodec")
+        n = _write_section(str(src), "LzopCodec", _Section("INODE", len(payload), 0), out)
         assert n == len(b"hello lzop section")
         # length overstated by the junk -> under-run -> reject
         with pytest.raises(ValueError, match="consumed"):
-            _decompress_to_file(str(src), 0, len(payload) + 4, out, "LzopCodec")
+            _write_section(
+                str(src), "LzopCodec", _Section("INODE", len(payload) + 4, 0), out
+            )

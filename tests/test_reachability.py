@@ -109,9 +109,6 @@ KEEP = (
     Keep("hfsa_spark.streaming.cdc:vacuum_snapshots", "CDC retention of old snapshots"),
     Keep("hfsa_spark.streaming.stateful:stateful_sessionize", "stateful-operator sessionization"),
     Keep("hfsa_spark.streaming.stateful:stateful_ewma", "stateful-operator EWMA"),
-    Keep("hfsa_spark.tables:write_bucketed", "catalog-managed bucketed table"),
-    Keep("hfsa_spark.tables:read_table", "reads a catalog-managed bucketed table"),
-    Keep("hfsa_spark.tables:_clear_orphaned_location", "used by tables.write_bucketed"),
 )
 
 

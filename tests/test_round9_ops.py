@@ -502,13 +502,13 @@ def test_bucketed_evolve_then_vacuum_keeps_mixed_eras_readable(
 
 def test_decompress_to_file_truncated_block_stream_raises(tmp_path):
     """A corrupt/truncated lz4 section must raise the clear truncation
-    error, never read into the next section (the streaming twin of
-    _block_stream_decompress's check)."""
+    error, never read into the next section (the scratch-file write runs
+    the same bounded reader as the whole-section read)."""
     import struct as _struct
 
     import pyarrow as pa
 
-    from hfsa_spark.extract.fsimage import _decompress_to_file
+    from hfsa_spark.extract.fsimage import _Section, _write_section
 
     payload = b"x" * 100
     comp = pa.Codec("lz4_raw").compress(payload, asbytes=True)
@@ -521,7 +521,7 @@ def test_decompress_to_file_truncated_block_stream_raises(tmp_path):
     p.write_bytes(img)
     out = tmp_path / "out.bin"
     with open(out, "wb") as dst, pytest.raises(ValueError, match="truncated"):
-        _decompress_to_file(str(p), 0, len(cut), dst, codec="Lz4Codec")
+        _write_section(str(p), "Lz4Codec", _Section("INODE", len(cut), 0), dst)
 
 
 def test_decompress_to_file_zstd_streams_bounded(tmp_path):
@@ -530,7 +530,7 @@ def test_decompress_to_file_zstd_streams_bounded(tmp_path):
     trailing foreign bytes around the section."""
     import pyarrow as pa
 
-    from hfsa_spark.extract.fsimage import _decompress_to_file
+    from hfsa_spark.extract.fsimage import _Section, _write_section
 
     payload = os.urandom(1 << 16) + b"tail" * 1000
     comp = pa.Codec("zstd").compress(payload, asbytes=True)
@@ -538,8 +538,8 @@ def test_decompress_to_file_zstd_streams_bounded(tmp_path):
     p.write_bytes(b"HEAD" + comp + b"TRAILINGSECTION")
     out = tmp_path / "out.bin"
     with open(out, "wb") as dst:
-        n = _decompress_to_file(
-            str(p), 4, len(comp), dst, codec="ZStandardCodec"
+        n = _write_section(
+            str(p), "ZStandardCodec", _Section("INODE", len(comp), 4), dst
         )
     assert n == len(payload)
     assert out.read_bytes() == payload
